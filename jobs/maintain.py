@@ -54,8 +54,42 @@ from pyspark import SparkConf
 from w3_data_etl_pipeline_spark.plans.laketable import LakeTable
 from w3_data_etl_pipeline_spark.session import get_spark
 
+# Verbs that read or commit the table's metadata and files without a
+# Spark job. They run on a session that starts on first use, so a
+# report or a metadata commit launches no JVM (a cold start costs
+# seconds per call). ``fsck --deep`` runs Spark jobs and starts it, as
+# does each ``auto`` action that does.
+_METADATA_VERBS = frozenset({
+    "stats", "history", "fsck", "compact-lineage", "expire", "rollback",
+    "clone", "auto", "tag", "drop-tag", "tags", "publish", "abandon", "staged",
+    "branch", "fast-forward", "drop-branch", "branches", "explain-skip",
+    "drop-constraint", "constraints", "skip-columns", "rename-column",
+    "drop-column", "set-default", "set-write-order", "set-partition-spec",
+})
 
-def _auto(t: LakeTable, args) -> dict:
+
+class _LazySession:
+    """Stands in for the SparkSession and starts it on first use."""
+
+    def __init__(self):
+        self._spark = None
+
+    def start(self):
+        if self._spark is None:
+            self._spark = get_spark(
+                "lake_maintain", master=SparkConf().get("spark.master", None)
+            )
+        return self._spark
+
+    def __getattr__(self, name):
+        return getattr(self.start(), name)
+
+    def stop(self):
+        if self._spark is not None:
+            self._spark.stop()
+
+
+def _auto(t: LakeTable, args, spark: _LazySession) -> dict:
     """Maintenance autopilot: read the O(metadata) signals once, fire
     only the actions they call for, and say why for each — the single
     verb a scheduler runs on a cadence instead of an operator watching
@@ -67,10 +101,12 @@ def _auto(t: LakeTable, args) -> dict:
     actions: list[dict] = []
     skipped: list[dict] = []
 
-    def act(name: str, reason: str, fn):
+    def act(name: str, reason: str, fn, spark_jobs: bool = True):
         if args.dry_run:
             actions.append({"action": name, "reason": reason, "dry_run": True})
             return None
+        if spark_jobs:
+            spark.start()
         res = fn()
         actions.append({"action": name, "reason": reason, "result": res})
         return res
@@ -127,6 +163,7 @@ def _auto(t: LakeTable, args) -> dict:
             "compact-lineage",
             f"{lin_files} lineage files > {args.lineage_max_files}",
             lambda: t.compact_lineage(max_files=args.lineage_max_files),
+            spark_jobs=False,
         )
     else:
         skipped.append({"action": "compact-lineage",
@@ -152,6 +189,7 @@ def _auto(t: LakeTable, args) -> dict:
             "expire",
             f"retain newest {args.retain} snapshots",
             lambda: t.expire_snapshots(keep_last=args.retain),
+            spark_jobs=False,
         )
         if args.dry_run:
             # expire has a real dry-run: report what WOULD go
@@ -429,7 +467,9 @@ def main(argv: list[str] | None = None) -> int:
                      help="revert to unpartitioned (spec 0)")
 
     args = p.parse_args(argv)
-    spark = get_spark("lake_maintain", master=SparkConf().get("spark.master", None))
+    spark = _LazySession()
+    if args.verb not in _METADATA_VERBS or (args.verb == "fsck" and args.deep):
+        spark.start()
     try:
         t = LakeTable(spark, args.table)
         before = t.current_version()
@@ -565,7 +605,7 @@ def main(argv: list[str] | None = None) -> int:
             out = {"verb": "widen", "name": args.name,
                    "type": args.type, "version": v}
         elif args.verb == "auto":
-            out = _auto(t, args)
+            out = _auto(t, args, spark)
         elif args.verb == "analyze":
             rep = t.analyze(args.cols or None)
             out = {"verb": "analyze", **rep}

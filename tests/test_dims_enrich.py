@@ -3,9 +3,8 @@
 from __future__ import annotations
 
 from pyspark.sql import Row
-from pyspark.sql import functions as F
 
-from w3_data_etl_pipeline_spark.functions.enrich import canonicalize_content, enrich_changes
+from w3_data_etl_pipeline_spark.functions.enrich import enrich_changes
 from w3_data_etl_pipeline_spark.operators.dims import (
     distinct_dim,
     enrich_missing_only,
@@ -59,14 +58,6 @@ def test_enrich_changes_lang_fill(spark):
     assert out["src/b.rs"] == "Rust"         # canonicalized claim
     assert out["src/c.unknownext"] is None   # nothing known
     assert out["src/d.md"] == "Markdown"     # case-normalized
-
-
-def test_canonicalize_content(spark):
-    df = spark.createDataFrame([Row(c="a \r\nb\t\nc  \n\n"), Row(c=None), Row(c="")])
-    out = [r["x"] for r in df.select(canonicalize_content(F.col("c")).alias("x")).collect()]
-    assert out[0] == "a\nb\nc\n"
-    assert out[1] is None
-    assert out[2] == ""
 
 
 def test_distinct_dim(spark):

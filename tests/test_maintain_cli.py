@@ -207,3 +207,32 @@ def test_set_partition_spec_verb(spark, tmp_path):
     assert all(f.get("pt") for f in t.snapshot()["files"])
     out = _run("--table", t.root, "set-partition-spec", "--clear")
     assert out["default_spec"] == 0
+
+
+def test_metadata_verbs_start_no_jvm(spark, tmp_path):
+    """Metadata-only verbs answer without launching a JVM: with no
+    usable Spark install they still succeed, while a verb that runs
+    Spark jobs fails to start."""
+    from pyspark.sql import types as T
+
+    from w3_data_etl_pipeline_spark.plans.laketable import LakeTable
+
+    schema = T.StructType([T.StructField("k", T.LongType()), T.StructField("v", T.StringType())])
+    t = LakeTable.create(spark, str(tmp_path / "nojvm"), schema, ["k"], n_buckets=2)
+    t.merge(spark.createDataFrame([(1, "a", 1, "I")], "k long, v string, lsn long, op string"), 1)
+    env = {**os.environ, "PYTHONPATH": ROOT, "SPARK_HOME": str(tmp_path / "no-spark")}
+
+    def run(*args):
+        return subprocess.run(
+            [sys.executable, os.path.join(ROOT, "jobs", "maintain.py"), "--table", t.root, *args],
+            capture_output=True, text=True, cwd=ROOT, timeout=120, env=env,
+        )
+
+    tg = run("tag", "pinned")
+    assert tg.returncode == 0, tg.stderr[-2000:]
+    assert json.loads(tg.stdout.splitlines()[-1])["pinned_version"] == t.current_version()
+    st = run("stats")
+    assert st.returncode == 0, st.stderr[-2000:]
+    assert json.loads(st.stdout.splitlines()[-1])["rows"] == 1
+    assert t.tags() == {"pinned": t.current_version()}
+    assert run("partitions").returncode != 0

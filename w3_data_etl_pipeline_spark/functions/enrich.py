@@ -5,7 +5,7 @@ Generalizes the reference's enrichment kernels (user-agent parse,
 geo lookup, path/status/latency derivation — reference
 src/common_package/{browser,os,device,bot,ip}_tasks.py) to the
 code-repo domain: language detection/normalization from path + a
-content heuristic, and content canonicalization. One UDF returns a
+content heuristic. One UDF returns a
 struct so a single Arrow pass yields every derived column (the
 reference wastefully re-parsed the same UA string in 4 separate
 tasks — SURVEY.md §2.2 P15-P18).
@@ -64,20 +64,6 @@ def detect_lang(path: pd.Series, lang: pd.Series) -> pd.DataFrame:
     source[claimed.notna()] = "claimed"
     source[claimed.isna() & from_ext.notna()] = "ext"
     return pd.DataFrame({"lang_norm": norm, "lang_source": source})
-
-
-@F.pandas_udf(T.StringType())
-def canonicalize_content(content: pd.Series) -> pd.Series:
-    """Canonical text form: CRLF->LF, strip trailing whitespace per
-    line, ensure single trailing newline. NULL-preserving."""
-    def canon(s):
-        if s is None:
-            return None
-        lines = s.replace("\r\n", "\n").replace("\r", "\n").split("\n")
-        out = "\n".join(ln.rstrip() for ln in lines).rstrip("\n")
-        return out + "\n" if out else ""
-
-    return content.map(canon, na_action="ignore")
 
 
 def enrich_changes(df: DataFrame) -> DataFrame:

@@ -140,10 +140,10 @@ class LakeTable:
         # keeps shallow-clone shared paths and the expire_snapshots
         # ownership guard CWD-independent.
         self.root = os.path.abspath(root)
-        self._meta = os.path.join(root, "_meta")
-        self._data = os.path.join(root, "data")
-        self._manifest_dir = os.path.join(root, "manifests")
-        self.lineage_dir = os.path.join(root, "lineage")
+        self._meta = os.path.join(self.root, "_meta")
+        self._data = os.path.join(self.root, "data")
+        self._manifest_dir = os.path.join(self.root, "manifests")
+        self.lineage_dir = os.path.join(self.root, "lineage")
         # manifest files are immutable + content-addressed, so entries
         # cache safely; bounded FIFO so a 10^5-commit stream doesn't
         # accumulate O(history) dead manifests in driver memory
@@ -184,7 +184,7 @@ class LakeTable:
         t._write_snapshot(snap)
         return t
 
-    def enable_row_lineage(self, max_retries: int = 3) -> int:
+    def enable_row_lineage(self) -> int:
         """Turn on row lineage for an existing table (Iceberg v3's
         ``row-lineage`` table property; enable-only, like the spec —
         ids, once handed out, must never be reassigned). One metadata
@@ -192,24 +192,10 @@ class LakeTable:
         ``first_row_id`` is backfilled from ``next_row_id`` (pre-
         enable rows thereby get inherited ids lazily, no data I/O).
         Idempotent; returns the snapshot version carrying the flag."""
-        for _ in range(max_retries + 1):
-            snap = self.snapshot()
-            if snap.get("row_lineage"):
-                return snap["version"]
-            new = dict(snap)
-            new.update(
-                version=snap["version"] + 1,
-                parent=snap["version"],
-                operation="enable-row-lineage",
-                row_lineage=True,
-            )
-            try:
-                self._write_snapshot(new)  # backfill happens at the choke point
-                return new["version"]
-            except FileExistsError:
-                continue
-        raise CommitConflictError(
-            f"enable_row_lineage lost the commit race {max_retries + 1} times"
+        # the backfill happens at _write_snapshot's choke point
+        return self._commit_meta(
+            "enable-row-lineage",
+            lambda snap: None if snap.get("row_lineage") else {"row_lineage": True},
         )
 
     def clone(
@@ -521,6 +507,66 @@ class LakeTable:
             f.write(str(snap["version"]))
         os.replace(tmp, os.path.join(self._meta, "current"))
 
+    # -- the optimistic commit contract ----------------------------------
+    #
+    # Every commit claims version N+1 through _write_snapshot's
+    # exclusive link. A writer that loses the claim re-reads and tries
+    # again a fixed number of times, then raises CommitConflictError.
+    # Recompute paths (metadata edits, overwrite, compact, DML,
+    # merge_into, rebucket, rollback) redo their work against the
+    # winner; only the ledgered rebase (_land: merge and publish) keeps
+    # its already-durable data files and rebases the manifest instead.
+
+    _COMMIT_ATTEMPTS = 4  # metadata and recompute paths
+    _REBASE_ATTEMPTS = 10  # the ledgered rebase and the streaming sink
+
+    def _optimistic(self, what: str, attempt, attempts: int | None = None):
+        """Run ``attempt()`` until it returns without losing the
+        version race (``FileExistsError``); return its result."""
+        n = attempts or self._COMMIT_ATTEMPTS
+        for _ in range(n):
+            try:
+                return attempt()
+            except FileExistsError:
+                continue  # lost the version race: re-read and retry
+        raise CommitConflictError(f"{what} lost the commit race {n} times")
+
+    def _commit_meta(self, operation: str, mutate, base: dict | None = None) -> int:
+        """One metadata-only commit. ``mutate(snap)`` validates against
+        the freshly read snapshot and returns the fields to change, or
+        None when nothing changes (the current version is returned).
+        The new snapshot copies ``snap`` — or ``base``, for a rollback
+        that restores another version's state — plus the changes."""
+
+        def attempt() -> int:
+            snap = self.snapshot()
+            changes = mutate(snap)
+            if changes is None:
+                return snap["version"]
+            new = dict(snap if base is None else base)
+            new.update(
+                changes,
+                version=snap["version"] + 1,
+                parent=snap["version"],
+                operation=operation,
+            )
+            self._write_snapshot(new)
+            return new["version"]
+
+        return self._optimistic(operation, attempt)
+
+    def _claim(self, new: dict, lin_path: str | None) -> bool:
+        """Claim ``new``'s version. A loser deletes ONLY the lineage
+        file it wrote for that version (uuid-named, so never a
+        winner's) and returns False."""
+        try:
+            self._write_snapshot(new)
+            return True
+        except FileExistsError:
+            if lin_path is not None and os.path.exists(lin_path):
+                os.remove(lin_path)
+            return False
+
     def current_version(self) -> int:
         with open(os.path.join(self._meta, "current")) as f:
             return int(f.read().strip())
@@ -600,15 +646,15 @@ class LakeTable:
             "name_log": log,
         }
 
-    def rename_column(self, old: str, new: str, max_retries: int = 3) -> int:
+    def rename_column(self, old: str, new: str) -> int:
         """History-safe column rename (Iceberg ``ALTER ... RENAME``):
         a metadata-only commit — no data file is touched. Old files
         keep the old physical name; readers alias it by field id, so
         reads, the change feed, and time travel all see one continuous
         column. Key columns and ``_lsn`` never rename (the bucket
         function and merge protocol are keyed on them)."""
-        for _ in range(max_retries + 1):
-            snap = self.snapshot()
+
+        def mutate(snap: dict) -> dict:
             schema = self.schema(snap)
             if old in snap["key_cols"] or old == LSN_COL:
                 raise ValueError(f"cannot rename key/meta column {old!r}")
@@ -633,33 +679,23 @@ class LakeTable:
                     for f_ in schema.fields
                 ]
             )
-            ns = dict(snap)
-            ns.update(
-                version=snap["version"] + 1,
-                parent=snap["version"],
-                operation="rename-column",
+            return dict(
                 schema=new_schema.jsonValue(),
                 field_ids=fids,
                 name_log=log,
                 schema_epoch=epoch,
             )
-            try:
-                self._write_snapshot(ns)
-                return ns["version"]
-            except FileExistsError:
-                continue  # lost the version race: re-read and retry
-        raise CommitConflictError(
-            f"rename_column lost the commit race {max_retries + 1} times"
-        )
 
-    def drop_column(self, name: str, max_retries: int = 3) -> int:
+        return self._commit_meta("rename-column", mutate)
+
+    def drop_column(self, name: str) -> int:
         """History-safe column drop: metadata-only. Old files keep the
         physical column; readers simply never select it. A later
         re-add under the same name gets a FRESH field id, so the
         dropped data can never resurrect (old epochs' maps don't know
         the new id -> those files read the column as NULL)."""
-        for _ in range(max_retries + 1):
-            snap = self.snapshot()
+
+        def mutate(snap: dict) -> dict:
             schema = self.schema(snap)
             if name in snap["key_cols"] or name == LSN_COL:
                 raise ValueError(f"cannot drop key/meta column {name!r}")
@@ -678,24 +714,14 @@ class LakeTable:
             new_schema = T.StructType(
                 [f_ for f_ in schema.fields if f_.name != name]
             )
-            ns = dict(snap)
-            ns.update(
-                version=snap["version"] + 1,
-                parent=snap["version"],
-                operation="drop-column",
+            return dict(
                 schema=new_schema.jsonValue(),
                 field_ids=fids,
                 name_log=log,
                 schema_epoch=epoch,
             )
-            try:
-                self._write_snapshot(ns)
-                return ns["version"]
-            except FileExistsError:
-                continue  # lost the version race: re-read and retry
-        raise CommitConflictError(
-            f"drop_column lost the commit race {max_retries + 1} times"
-        )
+
+        return self._commit_meta("drop-column", mutate)
 
     def add_column(
         self,
@@ -704,7 +730,6 @@ class LakeTable:
         initial_default=None,
         write_default=None,
         generated_as: str | None = None,
-        max_retries: int = 3,
     ) -> int:
         """Explicit ADD COLUMN with optional defaults (Iceberg spec-v3
         ``initial-default`` / ``write-default``): a metadata-only
@@ -759,12 +784,11 @@ class LakeTable:
             # analysis time (self-reference also lands here — the new
             # column is not in the schema yet)
             self._expr_refs(generated_as, self.schema(self.snapshot()))
-        for _ in range(max_retries + 1):
-            snap = self.snapshot()
+
+        def mutate(snap: dict) -> dict:
             schema = self.schema(snap)
             if name in schema.fieldNames() or name == LSN_COL:
                 raise ValueError(f"column {name!r} already exists")
-            self._ensure_field_meta(snap)
             fid = snap["next_field_id"]
             epoch = snap["schema_epoch"] + 1
             fids = dict(snap["field_ids"])
@@ -783,11 +807,7 @@ class LakeTable:
                 }
                 if generated_as is not None:
                     defaults[str(fid)]["generated"] = generated_as
-            ns = dict(snap)
-            ns.update(
-                version=snap["version"] + 1,
-                parent=snap["version"],
-                operation="add-column",
+            return dict(
                 schema=T.StructType(
                     schema.fields + [T.StructField(name, dt, True)]
                 ).jsonValue(),
@@ -797,18 +817,10 @@ class LakeTable:
                 schema_epoch=epoch,
                 defaults=defaults,
             )
-            try:
-                self._write_snapshot(ns)
-                return ns["version"]
-            except FileExistsError:
-                continue  # lost the version race: re-read and retry
-        raise CommitConflictError(
-            f"add_column lost the commit race {max_retries + 1} times"
-        )
 
-    def alter_column_default(
-        self, name: str, write_default=None, max_retries: int = 3
-    ) -> int:
+        return self._commit_meta("add-column", mutate)
+
+    def alter_column_default(self, name: str, write_default=None) -> int:
         """SET / DROP the column's WRITE default (SQL ``ALTER COLUMN
         ... SET DEFAULT`` / ``DROP DEFAULT``): affects only rows
         written AFTER this commit by writers that omit the column.
@@ -821,34 +833,21 @@ class LakeTable:
             raise ValueError(
                 f"write_default must be a JSON scalar, got {type(write_default).__name__}"
             )
-        for _ in range(max_retries + 1):
-            snap = self.snapshot()
+
+        def mutate(snap: dict) -> dict:
             if name not in self.schema(snap).fieldNames() or name == LSN_COL:
                 raise ValueError(f"no such column {name!r}")
-            self._ensure_field_meta(snap)
             fid = str(snap["field_ids"][name])
             defaults = {k: dict(v) for k, v in (snap.get("defaults") or {}).items()}
             d = defaults.setdefault(fid, {"initial": None, "write": None})
             d["write"] = write_default
             if d["initial"] is None and d["write"] is None:
                 del defaults[fid]
-            ns = dict(snap)
-            ns.update(
-                version=snap["version"] + 1,
-                parent=snap["version"],
-                operation="alter-column-default",
-                defaults=defaults,
-            )
-            try:
-                self._write_snapshot(ns)
-                return ns["version"]
-            except FileExistsError:
-                continue  # lost the version race: re-read and retry
-        raise CommitConflictError(
-            f"alter_column_default lost the commit race {max_retries + 1} times"
-        )
+            return {"defaults": defaults}
 
-    def alter_column_type(self, name: str, dtype: str, max_retries: int = 3) -> int:
+        return self._commit_meta("alter-column-default", mutate)
+
+    def alter_column_type(self, name: str, dtype: str) -> int:
         """Explicit safe type widening (``ALTER COLUMN ... TYPE``):
         metadata-only, same promotion set as merge-time widening
         (int->long, float->double — old files read through the wide
@@ -856,8 +855,8 @@ class LakeTable:
         long differently, so a key widening would silently re-bucket
         the table (same protection as ``_unify_schema``)."""
         dt = T.DataType.fromDDL(dtype)
-        for _ in range(max_retries + 1):
-            snap = self.snapshot()
+
+        def mutate(snap: dict) -> dict | None:
             schema = self.schema(snap)
             if name not in schema.fieldNames() or name == LSN_COL:
                 raise ValueError(f"no such column {name!r}")
@@ -865,32 +864,22 @@ class LakeTable:
                 raise ValueError(f"cannot widen bucketing key column {name!r}")
             cur = schema[name].dataType
             if cur.typeName() == dt.typeName():
-                return snap["version"]  # idempotent no-op
+                return None  # idempotent no-op
             if (cur.typeName(), dt.typeName()) not in self._PROMOTIONS:
                 raise ValueError(
                     f"unsafe type change {cur.typeName()} -> {dt.typeName()} "
                     f"(allowed: {sorted(self._PROMOTIONS)})"
                 )
-            ns = dict(snap)
-            ns.update(
-                version=snap["version"] + 1,
-                parent=snap["version"],
-                operation="alter-column-type",
-                schema=T.StructType(
+            return {
+                "schema": T.StructType(
                     [
                         T.StructField(name, dt, True) if f_.name == name else f_
                         for f_ in schema.fields
                     ]
-                ).jsonValue(),
-            )
-            try:
-                self._write_snapshot(ns)
-                return ns["version"]
-            except FileExistsError:
-                continue  # lost the version race: re-read and retry
-        raise CommitConflictError(
-            f"alter_column_type lost the commit race {max_retries + 1} times"
-        )
+                ).jsonValue()
+            }
+
+        return self._commit_meta("alter-column-type", mutate)
 
     @staticmethod
     def _default_value(snap: dict, col: str, which: str):
@@ -1012,7 +1001,7 @@ class LakeTable:
 
     _EQ_INDEXABLE = ("string", "long", "integer", "short", "byte")
 
-    def alter_skip_columns(self, cols: list[str], max_retries: int = 3) -> int:
+    def alter_skip_columns(self, cols: list[str]) -> int:
         """Opt columns into the per-file EQUALITY index (Iceberg's
         Puffin bloom-blob analogue): every file a later commit writes
         additionally records, per listed column, its exact distinct
@@ -1024,8 +1013,8 @@ class LakeTable:
         string/integer types — equality on floats or timestamps is
         ill-posed across engines. Pass [] to stop indexing (existing
         entries keep pruning; they describe immutable files)."""
-        for _ in range(max_retries + 1):
-            snap = self.snapshot()
+
+        def mutate(snap: dict) -> dict:
             schema = self.schema(snap)
             types = {f_.name: f_.dataType.typeName() for f_ in schema.fields}
             fids = snap.get("field_ids") or {}
@@ -1040,23 +1029,11 @@ class LakeTable:
                 if c not in fids:
                     raise ValueError(f"column {c!r} has no field id")
                 want.append(fids[c])
-            ns = dict(snap)
-            ns.update(
-                version=snap["version"] + 1,
-                parent=snap["version"],
-                operation="set-skip-columns",
-                skip_fids=sorted(want),
-            )
-            try:
-                self._write_snapshot(ns)
-                return ns["version"]
-            except FileExistsError:
-                continue  # lost the version race: re-read and retry
-        raise CommitConflictError(
-            f"alter_skip_columns lost the commit race {max_retries + 1} times"
-        )
+            return {"skip_fids": sorted(want)}
 
-    def analyze(self, cols: "list[str] | None" = None, max_retries: int = 3) -> dict:
+        return self._commit_meta("set-skip-columns", mutate)
+
+    def analyze(self, cols: "list[str] | None" = None) -> dict:
         """ANALYZE TABLE — table-level column statistics (the Iceberg
         ``ANALYZE``/Puffin theta-sketch analogue; the per-FILE manifest
         stats the engine already keeps answer "can this file match",
@@ -1135,24 +1112,10 @@ class LakeTable:
             "columns": columns,
             "recommend": {"equality_index": rec_eq, "write_order": rec_wo},
         }
-        for _ in range(max_retries + 1):
-            cur = self.snapshot()
-            ns = dict(cur)
-            ns.update(
-                version=cur["version"] + 1,
-                parent=cur["version"],
-                operation="analyze",
-                col_stats=report,
-            )
-            try:
-                self._write_snapshot(ns)
-                report["version"] = ns["version"]
-                return report
-            except FileExistsError:
-                continue
-        raise CommitConflictError(
-            f"analyze lost the commit race {max_retries + 1} times"
+        report["version"] = self._commit_meta(
+            "analyze", lambda cur: {"col_stats": report}
         )
+        return report
 
     def col_stats(self, version: int | None = None) -> "dict | None":
         """The last persisted ANALYZE report at ``version`` (None if
@@ -1166,7 +1129,6 @@ class LakeTable:
         cols: "list[str] | None",
         zorder: bool = False,
         target_rows: int | None = None,
-        max_retries: int = 3,
     ) -> int:
         """Declare a table WRITE ORDER (the Iceberg sort-order table
         metadata analogue; Delta's OPTIMIZE ZORDER made a standing
@@ -1221,22 +1183,9 @@ class LakeTable:
                 "zorder": bool(zorder),
                 "target_rows": int(target_rows) if target_rows else None,
             }
-        for _ in range(max_retries + 1):
-            snap = self.snapshot()
-            ns = dict(snap)
-            ns.update(
-                version=snap["version"] + 1,
-                parent=snap["version"],
-                operation="set-write-order" if wo else "clear-write-order",
-                write_order=wo,
-            )
-            try:
-                self._write_snapshot(ns)
-                return ns["version"]
-            except FileExistsError:
-                continue
-        raise CommitConflictError(
-            f"alter_write_order lost the commit race {max_retries + 1} times"
+        return self._commit_meta(
+            "set-write-order" if wo else "clear-write-order",
+            lambda snap: {"write_order": wo},
         )
 
     def write_order(self, version: int | None = None) -> "dict | None":
@@ -1244,9 +1193,7 @@ class LakeTable:
         wo = self.snapshot(version).get("write_order")
         return dict(wo) if wo else None
 
-    def add_constraint(
-        self, name: str, expr: str, validate: bool = True, max_retries: int = 3
-    ) -> int:
+    def add_constraint(self, name: str, expr: str, validate: bool = True) -> int:
         """ALTER TABLE ADD CONSTRAINT CHECK (the Delta constraints
         analogue): from this commit on, every write path that adds or
         changes rows (merge COW+MOR, overwrite, delete/update,
@@ -1281,8 +1228,8 @@ class LakeTable:
             ).count()
             if bad:
                 raise ConstraintViolation({name: bad})
-        for _ in range(max_retries + 1):
-            snap = self.snapshot()
+
+        def mutate(snap: dict) -> dict:
             cons = dict(snap.get("constraints") or {})
             if cons.get(name) not in (None, expr):
                 raise ValueError(
@@ -1290,45 +1237,21 @@ class LakeTable:
                     "expression — drop it first"
                 )
             cons[name] = expr
-            ns = dict(snap)
-            ns.update(
-                version=snap["version"] + 1,
-                parent=snap["version"],
-                operation="add-constraint",
-                constraints=cons,
-            )
-            try:
-                self._write_snapshot(ns)
-                return ns["version"]
-            except FileExistsError:
-                continue  # lost the version race: re-read and retry
-        raise CommitConflictError(
-            f"add_constraint lost the commit race {max_retries + 1} times"
-        )
+            return {"constraints": cons}
 
-    def drop_constraint(self, name: str, max_retries: int = 3) -> int:
+        return self._commit_meta("add-constraint", mutate)
+
+    def drop_constraint(self, name: str) -> int:
         """Remove a CHECK constraint (metadata-only commit)."""
-        for _ in range(max_retries + 1):
-            snap = self.snapshot()
+
+        def mutate(snap: dict) -> dict:
             cons = dict(snap.get("constraints") or {})
             if name not in cons:
                 raise ValueError(f"no such constraint {name!r}")
             del cons[name]
-            ns = dict(snap)
-            ns.update(
-                version=snap["version"] + 1,
-                parent=snap["version"],
-                operation="drop-constraint",
-                constraints=cons,
-            )
-            try:
-                self._write_snapshot(ns)
-                return ns["version"]
-            except FileExistsError:
-                continue
-        raise CommitConflictError(
-            f"drop_constraint lost the commit race {max_retries + 1} times"
-        )
+            return {"constraints": cons}
+
+        return self._commit_meta("drop-constraint", mutate)
 
     def constraints(self, version: int | None = None) -> dict[str, str]:
         """Active CHECK constraints at ``version`` (name -> SQL)."""
@@ -2110,7 +2033,7 @@ class LakeTable:
         param = int(item[2]) if len(item) > 2 and item[2] is not None else None
         return t, str(item[1]), param
 
-    def alter_partition_spec(self, fields, max_retries: int = 3) -> int:
+    def alter_partition_spec(self, fields) -> int:
         """Declare (or change) the table's partition spec — a
         metadata-only commit; no data file is touched. ``fields`` is a
         list of transform strings/tuples (``_parse_spec_field``);
@@ -2122,10 +2045,9 @@ class LakeTable:
         FIELD ID (+ their type), so the spec survives renames; DROPPING
         a column the CURRENT spec references is blocked."""
         parsed = [self._parse_spec_field(x) for x in (fields or [])]
-        for _ in range(max_retries + 1):
-            snap = self.snapshot()
+
+        def mutate(snap: dict) -> dict | None:
             schema = self.schema(snap)
-            self._ensure_field_meta(snap)
             fids = snap["field_ids"]
             new_fields = []
             for t, col, param in parsed:
@@ -2163,23 +2085,10 @@ class LakeTable:
                 target = max(int(k) for k in specs) + 1
                 specs[str(target)] = new_fields
             if target == int(snap.get("default_spec", 0) or 0):
-                return snap["version"]  # no-op: already the default
-            ns = dict(snap)
-            ns.update(
-                version=snap["version"] + 1,
-                parent=snap["version"],
-                operation="set-partition-spec",
-                partition_specs=specs,
-                default_spec=target,
-            )
-            try:
-                self._write_snapshot(ns)
-                return ns["version"]
-            except FileExistsError:
-                continue  # lost the version race: re-read and retry
-        raise CommitConflictError(
-            f"alter_partition_spec lost the commit race {max_retries + 1} times"
-        )
+                return None  # no-op: already the default
+            return {"partition_specs": specs, "default_spec": target}
+
+        return self._commit_meta("set-partition-spec", mutate)
 
     def _guard_spec_refs(self, snap: dict, col: str, verb: str) -> None:
         """Dropping a column the CURRENT partition spec references
@@ -3604,23 +3513,26 @@ class LakeTable:
     def overwrite(self, df: DataFrame, lsn: int = 0) -> int:
         """Replace the whole table (idempotent drop-and-rebuild — the
         reference's dominant table-maintenance mode, SURVEY.md §1.4)."""
-        snap = self.snapshot()
-        df = self._align_keys(df, snap)
-        if LSN_COL not in df.columns:
-            df = df.withColumn(LSN_COL, F.lit(lsn).cast("long"))
-        new_files = self._write_data(df, snap, version=snap["version"] + 1)
-        new = dict(snap)
-        new.update(
-            version=snap["version"] + 1,
-            files=new_files,
-            parent=snap["version"],
-            operation="overwrite",
-        )
-        new["schema"] = self._unify_schema(
-            self.schema(snap), df.schema, protect=tuple(snap["key_cols"])
-        ).jsonValue()
-        self._write_snapshot(new)
-        return new["version"]
+
+        def attempt() -> int:
+            snap = self.snapshot()
+            src = self._align_keys(df, snap)
+            if LSN_COL not in src.columns:
+                src = src.withColumn(LSN_COL, F.lit(lsn).cast("long"))
+            new = dict(snap)
+            new.update(
+                version=snap["version"] + 1,
+                files=self._write_data(src, snap, version=snap["version"] + 1),
+                parent=snap["version"],
+                operation="overwrite",
+                schema=self._unify_schema(
+                    self.schema(snap), src.schema, protect=tuple(snap["key_cols"])
+                ).jsonValue(),
+            )
+            self._write_snapshot(new)
+            return new["version"]
+
+        return self._optimistic("overwrite", attempt)
 
     # numeric types _zvalue can scale into equal-width buckets
     _Z_TYPES = ("long", "integer", "short", "byte", "double", "float", "decimal")
@@ -4034,7 +3946,6 @@ class LakeTable:
         events: DataFrame,
         batch_id: int,
         mode: str = "cow",
-        assume_deduped: bool = False,
         stage_id: str | None = None,
         covered_batch_ids: "tuple[int, ...]" = (),
         props: "dict | None" = None,
@@ -4080,10 +3991,7 @@ class LakeTable:
         bucket-partitioned pass both modes already make (sort by
         (key, lsn desc, commit desc) inside each bucket partition,
         keep the first row per key), so a raw batch costs exactly ONE
-        full-row shuffle — no separate dedup exchange. assume_deduped
-        is kept for API compatibility; it no longer changes the plan
-        (the fused window is the dedup) and correctness never depended
-        on it.
+        full-row shuffle — no separate dedup exchange.
 
         mode='cow' (copy-on-write): rewrites the touched buckets;
         read-optimized, write cost ∝ touched-bucket bytes.
@@ -4448,104 +4356,172 @@ class LakeTable:
         covered: "tuple[int, ...]" = (),
         props: "dict | None" = None,
     ) -> MergeStats:
-        """Ledgered snapshot commit with Iceberg-style OPTIMISTIC
-        retry: the data files are already durable; if another writer
-        claims our version number first (`_write_snapshot`'s 'x' open
-        loses the race), re-read the winner and rebase the manifest —
-        a delta append ('kind=delta') always commutes (read resolution
-        is by _lsn, order-free); a COW rewrite rebases only if the
-        winner left every bucket we rewrote untouched, else the data
-        we read is stale and ``CommitConflictError`` tells the caller
-        to re-run the merge. Retry cost is manifest arithmetic — no
-        data is rewritten."""
-        orig_touched = self._files_by_bucket(snap)
-        touched_set = set(touched)
-        base = snap
-        for _ in range(10):
-            if kind == "delta":
-                files = base["files"] + new_files
+        """Ledgered commit of a merge whose data files — written for
+        ``version``, ``snap``'s successor — are already durable. The
+        first attempt claims ``version`` on ``snap`` itself; a lost
+        race rebases through ``_land``."""
+        pending = self._pending(snap, schema, batch_id, new_files, lin_rows, touched, kind)
+        return self._land(pending, "merge", snap=snap, covered=covered, props=props)
+
+    def _pending(
+        self,
+        snap: dict,
+        schema: T.StructType,
+        batch_id: int,
+        new_files: list[dict],
+        lin_rows,
+        touched: list[int],
+        kind: str,
+    ) -> dict:
+        """A merge result whose data files are durable but whose
+        snapshot is not yet claimed: the new file entries, the unified
+        schema, the lineage pre-pass rows (stamped when a version
+        lands), and what ``_land`` checks a later main against — the
+        base's files in every touched bucket, its schema epoch and its
+        bucket count. A staged commit persists exactly this."""
+        by_bucket = self._files_by_bucket(snap)
+        return {
+            "batch_id": int(batch_id),
+            "kind": kind,
+            "schema": schema.jsonValue(),
+            "base_version": snap["version"],
+            "base_schema_epoch": snap.get("schema_epoch", 0),
+            "base_n_buckets": snap["n_buckets"],
+            "base_touched": {
+                str(b): list(by_bucket.get(b, ())) for b in touched
+            },
+            "touched": [int(b) for b in touched],
+            "new_files": new_files,
+            "lin_rows": [
+                {
+                    "_bucket": int(r["_bucket"]),
+                    "min_lsn": int(r["min_lsn"]),
+                    "max_lsn": int(r["max_lsn"]),
+                    "applied_count": int(r["applied_count"]),
+                }
+                for r in lin_rows
+            ],
+        }
+
+    def _rebase_conflict(self, pending: dict, cur: dict) -> str | None:
+        """Why ``pending`` cannot rebase onto ``cur``, or None."""
+        if cur.get("schema_epoch", 0) != pending["base_schema_epoch"]:
+            # a rename/drop: the files were written under the old
+            # identity map
+            return "schema identity changed (rename/drop on main)"
+        if cur["n_buckets"] != pending.get("base_n_buckets", cur["n_buckets"]):
+            # the files' bucket labels are under the old bucket
+            # function; even a delta append would poison every
+            # bucket-pruned path (point lookups, CDF, compaction folds)
+            return (
+                f"concurrent rebucket ({pending['base_n_buckets']} -> "
+                f"{cur['n_buckets']})"
+            )
+        if pending["kind"] != "delta":
+            cur_by = self._files_by_bucket(cur)
+            base = pending["base_touched"]
+            if any(
+                tuple(cur_by.get(b, ())) != tuple(base.get(str(b), ()))
+                for b in pending["touched"]
+            ):
+                return "concurrent commit modified rewritten buckets"
+        return None
+
+    def _land(
+        self,
+        pending: dict,
+        operation: str,
+        snap: dict | None = None,
+        covered: "tuple[int, ...]" = (),
+        props: "dict | None" = None,
+    ) -> MergeStats:
+        """The ledgered rebase shared by merge and publish: claim the
+        next version for ``pending``'s durable files. The first attempt
+        uses ``snap`` when given (the snapshot a merge already read);
+        every other attempt re-reads main and rebases onto it:
+
+        * a delta append commutes with any concurrent commit (read
+          resolution is by _lsn, order-free);
+        * a COW rewrite rebases only if main left every touched bucket
+          unchanged — otherwise the data it read is stale;
+        * a rebucket or a schema-epoch change always conflicts;
+        * a batch main already ledgered (a replay won) returns
+          applied=False, so exactly-once holds.
+
+        A conflict raises CommitConflictError and the caller re-runs
+        the merge. Lineage rows carry the version that lands; a loser
+        deletes only its own lineage file. Retry cost is manifest
+        arithmetic — no data is rewritten."""
+        batch_id = pending["batch_id"]
+        stage_id = pending.get("stage_id")
+        what = f"publish {stage_id!r}" if stage_id else f"batch {batch_id}"
+        touched = set(pending["touched"])
+        schema = T.StructType.fromJson(pending["schema"])
+        cur = snap
+        for _ in range(self._REBASE_ATTEMPTS):
+            if cur is None:
+                cur = self.snapshot()
+                if self._ledger_contains(cur["ledger"], batch_id):
+                    return MergeStats(
+                        batch_id=batch_id,
+                        applied=False,
+                        version=cur["version"],
+                        stage_id=stage_id,
+                    )
+                why = self._rebase_conflict(pending, cur)
+                if why:
+                    raise CommitConflictError(
+                        f"{what}: {why}; re-run the merge against the "
+                        f"current snapshot v{cur['version']}"
+                    )
+            version = cur["version"] + 1
+            if pending["kind"] == "delta":
+                files = cur["files"] + pending["new_files"]
             else:
                 files = [
-                    f for f in base["files"] if f["bucket"] not in touched_set
-                ] + new_files
+                    f for f in cur["files"] if f["bucket"] not in touched
+                ] + pending["new_files"]
             # per-partition lineage/metrics (north rule): offset range +
             # applied count per bucket, tagged with the commit version
             lineage = [
                 {
-                    "batch_id": int(batch_id),
-                    "partition_bucket": int(r["_bucket"]),
-                    "min_lsn": int(r["min_lsn"]),
-                    "max_lsn": int(r["max_lsn"]),
-                    "applied_count": int(r["applied_count"]),
+                    "batch_id": batch_id,
+                    "partition_bucket": r["_bucket"],
+                    "min_lsn": r["min_lsn"],
+                    "max_lsn": r["max_lsn"],
+                    "applied_count": r["applied_count"],
                     "snapshot_version": version,
                 }
-                for r in lin_rows
+                for r in pending["lin_rows"]
             ]
-            lin_path = self._write_lineage(lineage, version, batch_id) if lineage else None
-            new = dict(base)
+            new = dict(cur)
             new.update(
                 version=version,
-                schema=schema.jsonValue(),
+                schema=self._unify_schema(
+                    self.schema(cur), schema, protect=tuple(cur["key_cols"])
+                ).jsonValue(),
                 files=files,
-                parent=base["version"],
+                parent=cur["version"],
                 ledger=functools.reduce(
-                    self._ledger_add, [*covered, batch_id], base["ledger"]
+                    self._ledger_add, [*covered, batch_id], cur["ledger"]
                 ),
-                operation="merge-mor" if kind == "delta" else "merge-cow",
+                operation=f"{operation}-{'mor' if pending['kind'] == 'delta' else 'cow'}",
             )
             if props:
                 new.update(props)  # atomic with the data commit
-            try:
-                self._write_snapshot(new)
-            except FileExistsError:
-                # lost the race: drop ONLY the lineage file this attempt
-                # wrote (uuid-named, so never a winner's file) and rebase
-                if lin_path is not None and os.path.exists(lin_path):
-                    os.remove(lin_path)
-                cur = self.snapshot()
-                if self._ledger_contains(cur["ledger"], batch_id):
-                    # the winner WAS our batch (duplicate replay race)
-                    return MergeStats(batch_id=batch_id, applied=False, version=cur["version"])
-                if cur["n_buckets"] != snap["n_buckets"]:
-                    # a concurrent REBUCKET changed the bucket function:
-                    # our files' bucket labels were computed under the
-                    # old count, and appending them would poison every
-                    # bucket-pruned path (point lookups, CDF, compaction
-                    # fold grouping). Delta appends normally commute,
-                    # but not across a bucket-function change — re-run
-                    # the merge so the batch re-buckets under the winner.
-                    raise CommitConflictError(
-                        f"batch {batch_id}: concurrent rebucket "
-                        f"({snap['n_buckets']} -> {cur['n_buckets']}); re-run "
-                        f"the merge against the current snapshot v{cur['version']}"
-                    ) from None
-                if kind != "delta":
-                    cur_by_bucket = self._files_by_bucket(cur)
-                    if any(
-                        cur_by_bucket.get(b) != orig_touched.get(b) for b in touched_set
-                    ):
-                        raise CommitConflictError(
-                            f"batch {batch_id}: concurrent commit modified "
-                            f"rewritten buckets; re-run the merge against the "
-                            f"current snapshot v{cur['version']}"
-                        ) from None
-                schema = self._unify_schema(
-                    self.schema(cur), schema, protect=tuple(cur["key_cols"])
+            lin_path = self._write_lineage(lineage, version, batch_id) if lineage else None
+            if self._claim(new, lin_path):
+                return MergeStats(
+                    batch_id=batch_id,
+                    applied=True,
+                    version=version,
+                    deduped_rows=sum(r["applied_count"] for r in pending["lin_rows"]),
+                    touched_buckets=len(touched),
+                    lineage=lineage,
+                    stage_id=stage_id,
                 )
-                base = cur
-                version = cur["version"] + 1
-                continue
-            break
-        else:
-            raise CommitConflictError(f"batch {batch_id}: commit retries exhausted")
-        return MergeStats(
-            batch_id=batch_id,
-            applied=True,
-            version=version,
-            deduped_rows=sum(r["applied_count"] for r in lin_rows),
-            touched_buckets=len(touched),
-            lineage=lineage,
-        )
+            cur = None
+        raise CommitConflictError(f"{what}: commit retries exhausted")
 
     # ---------------- write-audit-publish (staged commits) ----------------
     #
@@ -4600,39 +4576,13 @@ class LakeTable:
         kind: str,
         stage_id: str,
     ) -> MergeStats:
-        """Stage 1 of WAP: persist everything publish() needs as a
-        staged ref — the new file entries (data already durable), the
-        unified schema, the base's per-touched-bucket file lists (the
-        COW conflict check), its schema epoch (the rename/drop
-        conflict check), and the lineage pre-pass rows (lineage is
-        written at PUBLISH with the final version, so abandoned
-        stages leave no audit rows). Exclusive-create: a duplicate
-        stage_id is an error, not an overwrite."""
-        by_bucket = self._files_by_bucket(snap)
-        doc = {
-            "stage_id": stage_id,
-            "batch_id": int(batch_id),
-            "kind": kind,
-            "schema": schema.jsonValue(),
-            "base_version": snap["version"],
-            "base_schema_epoch": snap.get("schema_epoch", 0),
-            "base_n_buckets": snap["n_buckets"],
-            "base_touched": {
-                str(b): list(by_bucket.get(b, ())) for b in touched
-            },
-            "touched": [int(b) for b in touched],
-            "new_files": new_files,
-            "lin_rows": [
-                {
-                    "_bucket": int(r["_bucket"]),
-                    "min_lsn": int(r["min_lsn"]),
-                    "max_lsn": int(r["max_lsn"]),
-                    "applied_count": int(r["applied_count"]),
-                }
-                for r in lin_rows
-            ],
-            "created_at": time.time(),
-        }
+        """Stage 1 of WAP: persist the pending commit (``_pending``) as
+        a staged ref. Lineage is written at PUBLISH with the final
+        version, so abandoned stages leave no audit rows.
+        Exclusive-create: a duplicate stage_id is an error, not an
+        overwrite."""
+        doc = self._pending(snap, schema, batch_id, new_files, lin_rows, touched, kind)
+        doc.update(stage_id=stage_id, created_at=time.time())
         path = self._staged_path(stage_id)
         tmp = path + f".tmp.{uuid.uuid4().hex[:8]}"
         with open(tmp, "w") as f:
@@ -4645,7 +4595,7 @@ class LakeTable:
             batch_id=batch_id,
             applied=False,
             version=snap["version"],
-            deduped_rows=sum(r["applied_count"] for r in lin_rows),
+            deduped_rows=sum(r["applied_count"] for r in doc["lin_rows"]),
             touched_buckets=len(touched),
             stage_id=stage_id,
         )
@@ -4704,111 +4654,19 @@ class LakeTable:
             df = self._resolve(df, pseudo)
         return df.drop(OP_COL) if include_meta else df.drop(LSN_COL, OP_COL)
 
-    def publish(self, stage_id: str, max_retries: int = 10) -> MergeStats:
+    def publish(self, stage_id: str) -> MergeStats:
         """Stage 2 of WAP: fast-forward the staged commit onto main.
-        Pure metadata — no data is rewritten. Semantics mirror
-        _commit_merge's optimistic rebase: a delta stage commutes with
-        any main advance (read resolution is by _lsn); a COW stage
-        publishes only if main left every bucket it rewrote untouched,
-        else ``CommitConflictError`` tells the caller to re-merge the
-        batch against current. A rename/drop on main since the stage
-        (schema-epoch change) also conflicts: the staged files were
-        written under the old identity map. If main already applied
+        Pure metadata — no data is rewritten. Same ledgered rebase as a
+        live merge (``_land``): a delta stage commutes with any main
+        advance; a COW stage publishes only if main left every bucket
+        it rewrote untouched; a rename/drop or rebucket on main since
+        the stage conflicts — ``CommitConflictError`` tells the caller
+        to re-merge the batch against current. If main already applied
         this batch_id (e.g. a replay raced the audit), the stage is
         dropped and applied=False returned — exactly-once holds."""
-        doc = self._load_staged(stage_id)
-        batch_id = doc["batch_id"]
-        touched_set = set(doc["touched"])
-        for _ in range(max_retries):
-            cur = self.snapshot()
-            if self._ledger_contains(cur["ledger"], batch_id):
-                self.abandon(stage_id)
-                return MergeStats(
-                    batch_id=batch_id,
-                    applied=False,
-                    version=cur["version"],
-                    stage_id=stage_id,
-                )
-            if cur.get("schema_epoch", 0) != doc["base_schema_epoch"]:
-                raise CommitConflictError(
-                    f"publish {stage_id!r}: schema identity changed since the "
-                    f"stage (rename/drop on main); re-run the merge against "
-                    f"the current snapshot v{cur['version']}"
-                )
-            if cur["n_buckets"] != doc.get("base_n_buckets", cur["n_buckets"]):
-                # bucket function changed since the stage: the staged
-                # files' bucket labels are under the old count — even a
-                # delta fast-forward would poison bucket-pruned reads
-                raise CommitConflictError(
-                    f"publish {stage_id!r}: concurrent rebucket since the "
-                    f"stage; re-run the merge against the current snapshot "
-                    f"v{cur['version']}"
-                )
-            if doc["kind"] != "delta":
-                cur_by = self._files_by_bucket(cur)
-                for b in touched_set:
-                    if tuple(cur_by.get(b, ())) != tuple(
-                        doc["base_touched"].get(str(b), [])
-                    ):
-                        raise CommitConflictError(
-                            f"publish {stage_id!r}: concurrent commit modified "
-                            f"rewritten bucket {b}; re-run the merge against "
-                            f"the current snapshot v{cur['version']}"
-                        )
-                files = [
-                    f for f in cur["files"] if f["bucket"] not in touched_set
-                ] + doc["new_files"]
-            else:
-                files = cur["files"] + doc["new_files"]
-            schema = self._unify_schema(
-                self.schema(cur),
-                T.StructType.fromJson(doc["schema"]),
-                protect=tuple(cur["key_cols"]),
-            )
-            version = cur["version"] + 1
-            lineage = [
-                {
-                    "batch_id": int(batch_id),
-                    "partition_bucket": r["_bucket"],
-                    "min_lsn": r["min_lsn"],
-                    "max_lsn": r["max_lsn"],
-                    "applied_count": r["applied_count"],
-                    "snapshot_version": version,
-                }
-                for r in doc["lin_rows"]
-            ]
-            lin_path = (
-                self._write_lineage(lineage, version, batch_id) if lineage else None
-            )
-            new = dict(cur)
-            new.update(
-                version=version,
-                schema=schema.jsonValue(),
-                files=files,
-                parent=cur["version"],
-                ledger=self._ledger_add(cur["ledger"], batch_id),
-                operation="publish-mor" if doc["kind"] == "delta" else "publish-cow",
-            )
-            try:
-                self._write_snapshot(new)
-            except FileExistsError:
-                if lin_path is not None and os.path.exists(lin_path):
-                    os.remove(lin_path)
-                continue
-            try:
-                os.remove(self._staged_path(stage_id))
-            except FileNotFoundError:
-                pass
-            return MergeStats(
-                batch_id=batch_id,
-                applied=True,
-                version=version,
-                deduped_rows=sum(r["applied_count"] for r in doc["lin_rows"]),
-                touched_buckets=len(doc["touched"]),
-                lineage=lineage,
-                stage_id=stage_id,
-            )
-        raise CommitConflictError(f"publish {stage_id!r}: commit retries exhausted")
+        st = self._land(self._load_staged(stage_id), "publish")
+        self.abandon(stage_id)
+        return st
 
     def abandon(self, stage_id: str) -> bool:
         """Drop a staged commit. Its data files become unreferenced
@@ -5045,7 +4903,7 @@ class LakeTable:
         pq.write_table(tbl, path)
         return path
 
-    def fast_forward(self, name: str, max_retries: int = 3) -> MergeStats:
+    def fast_forward(self, name: str) -> MergeStats:
         """Publish branch ``name``'s head onto main as one
         metadata-only commit. Main must still be at the branch's fork
         point (see the section comment); a branch with no commits
@@ -5064,15 +4922,10 @@ class LakeTable:
             return MergeStats(
                 batch_id=-1, applied=False, version=self.current_version()
             )
-        for _ in range(max_retries):
-            cur = self.snapshot()
-            if cur["version"] != fork:
-                raise CommitConflictError(
-                    f"fast_forward {name!r}: main advanced past the fork "
-                    f"point (v{fork} -> v{cur['version']}), so the branch no "
-                    f"longer descends from current; re-merge its batches or "
-                    f"re-fork"
-                )
+        # one attempt: a lost version race means main moved past the
+        # fork, which no retry can undo
+        cur = self.snapshot()
+        if cur["version"] == fork:
             new = dict(head)
             new.pop("branch", None)
             new.update(
@@ -5082,26 +4935,21 @@ class LakeTable:
                 ff_branch=name,
                 ff_head=head["version"],
             )
-            lin_path = self._restamp_branch_lineage(h, new["version"])
-            try:
-                self._write_snapshot(new)
-            except FileExistsError:
-                if lin_path is not None and os.path.exists(lin_path):
-                    os.remove(lin_path)
-                continue
-            return MergeStats(
-                batch_id=-1,
-                applied=True,
-                version=new["version"],
-                touched_buckets=len(
-                    {
-                        f["bucket"]
-                        for f in head["files"]
-                        if f["path"] not in {g["path"] for g in cur["files"]}
-                    }
-                ),
-            )
-        raise CommitConflictError(f"fast_forward {name!r}: commit retries exhausted")
+            if self._claim(new, self._restamp_branch_lineage(h, new["version"])):
+                cur_paths = {g["path"] for g in cur["files"]}
+                return MergeStats(
+                    batch_id=-1,
+                    applied=True,
+                    version=new["version"],
+                    touched_buckets=len(
+                        {f["bucket"] for f in head["files"] if f["path"] not in cur_paths}
+                    ),
+                )
+        raise CommitConflictError(
+            f"fast_forward {name!r}: main advanced past the fork point "
+            f"(v{fork} -> v{self.current_version()}), so the branch no longer "
+            f"descends from current; re-merge its batches or re-fork"
+        )
 
     def drop_branch(self, name: str) -> bool:
         """Remove the branch ref, its snapshot line, and its private
@@ -5122,7 +4970,6 @@ class LakeTable:
         self,
         min_deltas: int | None = None,
         min_delta_rows: int | None = None,
-        max_retries: int = 3,
         cluster_by: list[str] | None = None,
         max_records_per_file: int | None = None,
         zorder: bool = False,
@@ -5135,7 +4982,7 @@ class LakeTable:
         recomputed against the winner's snapshot and retried (the fold
         set may have changed; this attempt's uuid-dir data files become
         orphans for the periodic expire scan). Raises
-        CommitConflictError after ``max_retries`` lost races.
+        CommitConflictError after ``_COMMIT_ATTEMPTS`` lost races.
 
         Both thresholds None: full rewrite — resolve once, rewrite
         every bucket as kind='base' (also collapses small base files).
@@ -5185,16 +5032,12 @@ class LakeTable:
         delta-bucket exemption and judges delta files by their own
         bounds — a delta bucket entirely outside the predicate is
         simply left alone, which a read could not do."""
-        for _ in range(max_retries + 1):
-            try:
-                return self._compact_once(
-                    min_deltas, min_delta_rows, cluster_by, max_records_per_file,
-                    zorder, where,
-                )
-            except FileExistsError:
-                continue  # lost the version race: recompute the fold
-        raise CommitConflictError(
-            f"compact lost the commit race {max_retries + 1} times"
+        return self._optimistic(
+            "compact",
+            lambda: self._compact_once(
+                min_deltas, min_delta_rows, cluster_by, max_records_per_file,
+                zorder, where,
+            ),
         )
 
     def _compact_once(
@@ -5309,7 +5152,6 @@ class LakeTable:
     def delete_where(
         self,
         predicates: "list[tuple] | str",
-        max_retries: int = 3,
         mode: str = "cow",
     ) -> dict:
         """Row-level DELETE FROM ... WHERE (the Iceberg/Delta DELETE
@@ -5344,13 +5186,12 @@ class LakeTable:
         (the later commit), so CDC max-LSN semantics are untouched;
         readers pay the standard MOR window until compact() folds.
         """
-        return self._dml("delete", predicates, None, max_retries, mode)
+        return self._dml("delete", predicates, None, mode)
 
     def update_where(
         self,
         predicates: "list[tuple] | str",
         assignments: dict[str, str],
-        max_retries: int = 3,
         mode: str = "cow",
     ) -> dict:
         """Row-level UPDATE ... SET ... WHERE (Iceberg/Delta UPDATE
@@ -5367,14 +5208,13 @@ class LakeTable:
         keeps the stored _lsn and wins by data-sequence number)."""
         if not assignments:
             raise ValueError("update_where needs at least one assignment")
-        return self._dml("update", predicates, assignments, max_retries, mode)
+        return self._dml("update", predicates, assignments, mode)
 
     def _dml(
         self,
         what: str,
         predicates: "list[tuple] | str",
         assignments: dict[str, str] | None,
-        max_retries: int,
         mode: str = "cow",
     ) -> dict:
         if mode not in ("cow", "mor", "dv"):
@@ -5403,13 +5243,9 @@ class LakeTable:
                         "cannot be assigned directly — assign its referenced "
                         "columns and it recomputes"
                     )
-        for _ in range(max_retries + 1):
-            try:
-                return self._dml_once(what, predicates, assignments, mode)
-            except FileExistsError:
-                continue  # lost the version race: recompute the rewrite
-        raise CommitConflictError(
-            f"{what}_where lost the commit race {max_retries + 1} times"
+        return self._optimistic(
+            f"{what}_where",
+            lambda: self._dml_once(what, predicates, assignments, mode),
         )
 
     def _dml_once(
@@ -5656,7 +5492,6 @@ class LakeTable:
         source: DataFrame,
         clauses: list[tuple],
         insert_lsn: int = 0,
-        max_retries: int = 3,
         mode: str = "cow",
     ) -> dict:
         """Generic MERGE INTO (the Delta ``merge``/Iceberg ``MERGE
@@ -5723,13 +5558,9 @@ class LakeTable:
             )
         if mode not in ("cow", "mor"):
             raise ValueError(f"mode must be 'cow' or 'mor', got {mode!r}")
-        for _ in range(max_retries + 1):
-            try:
-                return self._merge_into_once(source, clauses, insert_lsn, mode)
-            except FileExistsError:
-                continue  # lost the version race: recompute against the winner
-        raise CommitConflictError(
-            f"merge_into lost the commit race {max_retries + 1} times"
+        return self._optimistic(
+            "merge_into",
+            lambda: self._merge_into_once(source, clauses, insert_lsn, mode),
         )
 
     def _merge_into_once(
@@ -6249,7 +6080,7 @@ class LakeTable:
         )
         return out
 
-    def rebucket(self, n_buckets: int, max_retries: int = 3) -> int:
+    def rebucket(self, n_buckets: int) -> int:
         """Change the table's hash-bucket count (Iceberg
         partition-spec-evolution analogue): full resolved read,
         rewrite every row under the new bucket function, one
@@ -6268,7 +6099,8 @@ class LakeTable:
         keyspace grows 1000x — rebucket to 4096 and every downstream
         exchange re-sizes. Cost: one full COW rewrite (the same bytes
         a full compact() moves)."""
-        for _ in range(max_retries + 1):
+
+        def attempt() -> int:
             snap = self.snapshot()
             if snap["n_buckets"] == n_buckets:
                 return snap["version"]
@@ -6292,16 +6124,12 @@ class LakeTable:
             proto.update(
                 version=version, files=files, parent=snap["version"], operation="rebucket"
             )
-            try:
-                self._write_snapshot(proto)
-                return version
-            except FileExistsError:
-                continue  # lost the race: re-read the winner, re-fold
-        raise CommitConflictError(
-            f"rebucket lost the commit race {max_retries + 1} times"
-        )
+            self._write_snapshot(proto)
+            return version
 
-    def rollback(self, to_version: int, max_retries: int = 3) -> int:
+        return self._optimistic("rebucket", attempt)
+
+    def rollback(self, to_version: int) -> int:
         """Roll the table back to ``to_version`` as a NEW commit
         (Iceberg's ``rollback_to_snapshot`` analogue): the head's file
         set, schema, and exactly-once ledger are restored to the
@@ -6327,36 +6155,27 @@ class LakeTable:
                 f"cannot rollback to v{to_version}: {len(missing)} data file(s) "
                 f"already garbage-collected (first: {missing[0]})"
             )
-        for _ in range(max_retries + 1):
-            cur = self.snapshot()
+
+        def mutate(cur: dict) -> dict | None:
             if cur["version"] == to_version:
-                return to_version
-            new = dict(target)
-            new.update(
-                version=cur["version"] + 1,
-                parent=cur["version"],
-                rollback_of=to_version,
-                operation="rollback",
-            )
+                return None
             # row-lineage invariants survive a rollback: the flag is
             # enable-only (ids, once handed out, are never reassigned)
             # and next_row_id never regresses — a rollback past the
             # enable point must not let a later enable re-issue ids
             # already burned by the rolled-back commits.
+            changes = {
+                "rollback_of": to_version,
+                "next_row_id": max(
+                    int(cur.get("next_row_id") or 0),
+                    int(target.get("next_row_id") or 0),
+                ),
+            }
             if cur.get("row_lineage") or target.get("row_lineage"):
-                new["row_lineage"] = True
-            new["next_row_id"] = max(
-                int(cur.get("next_row_id") or 0),
-                int(target.get("next_row_id") or 0),
-            )
-            try:
-                self._write_snapshot(new)
-                return new["version"]
-            except FileExistsError:
-                continue  # lost the version race: re-read and retry
-        raise CommitConflictError(
-            f"rollback lost the commit race {max_retries + 1} times"
-        )
+                changes["row_lineage"] = True
+            return changes
+
+        return self._commit_meta("rollback", mutate, base=target)
 
     def expire_snapshots(
         self,

@@ -18,6 +18,7 @@ Replaces the reference's weekly Airflow batch trigger
 
 from __future__ import annotations
 
+import inspect
 import os
 from dataclasses import dataclass, field
 
@@ -214,44 +215,23 @@ def run_stream_from(
     source: DataFrame,
     table: LakeTable,
     checkpoint_dir: str,
-    enrich: bool = True,
-    salt_partitions: int | None = None,
-    mode: str = "cow",
     available_now: bool = True,
-    auto_compact_deltas: int | None = None,
-    auto_compact_delta_rows: int | None = None,
-    expire_keep: int | None = None,
-    quarantine_dir: str | None = None,
-    patches: bool | str = "auto",
-    lineage_compact_every: int | None = None,
-    audit=None,
+    **apply_kw,
 ) -> CdcRun:
     """Drive ANY streaming DataFrame of change events through the
     engine — the foreachBatch body is source-agnostic (file WAL here,
     Kafka/rate/socket on a cluster are just a different `source`).
-    With ``available_now`` the query drains what exists and stops;
-    calling again after more data lands — or after a kill — resumes
-    from the checkpoint."""
+    ``apply_kw`` are ``apply_batch``'s policy keywords, applied to
+    every microbatch. With ``available_now`` the query drains what
+    exists and stops; calling again after more data lands — or after
+    a kill — resumes from the checkpoint."""
+    # bind now, not in the first microbatch: a misspelled keyword
+    # raises TypeError before the query starts
+    inspect.signature(apply_batch).bind(table, source, 0, **apply_kw)
     run = CdcRun()
 
     def _sink(df: DataFrame, batch_id: int) -> None:
-        run.stats.append(
-            apply_batch(
-                table,
-                df,
-                batch_id,
-                enrich=enrich,
-                salt_partitions=salt_partitions,
-                mode=mode,
-                auto_compact_deltas=auto_compact_deltas,
-                auto_compact_delta_rows=auto_compact_delta_rows,
-                expire_keep=expire_keep,
-                quarantine_dir=quarantine_dir,
-                patches=patches,
-                lineage_compact_every=lineage_compact_every,
-                audit=audit,
-            )
-        )
+        run.stats.append(apply_batch(table, df, batch_id, **apply_kw))
 
     w = source.writeStream.foreachBatch(_sink).option("checkpointLocation", checkpoint_dir)
     if available_now:
@@ -270,39 +250,17 @@ def run_stream(
     checkpoint_dir: str,
     schema: T.StructType,
     max_files_per_trigger: int = 1,
-    enrich: bool = True,
-    salt_partitions: int | None = None,
-    mode: str = "cow",
-    auto_compact_deltas: int | None = None,
-    auto_compact_delta_rows: int | None = None,
-    expire_keep: int | None = None,
-    quarantine_dir: str | None = None,
-    patches: bool | str = "auto",
-    lineage_compact_every: int | None = None,
-    audit=None,
+    **apply_kw,
 ) -> CdcRun:
     """File-WAL convenience wrapper over ``run_stream_from``: tail
-    parquet WAL segments with ``availableNow``, then stop."""
+    parquet WAL segments with ``availableNow``, then stop.
+    ``apply_kw`` are ``apply_batch``'s policy keywords."""
     src = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", max_files_per_trigger)
         .parquet(events_dir)
     )
-    return run_stream_from(
-        src,
-        table,
-        checkpoint_dir,
-        enrich=enrich,
-        salt_partitions=salt_partitions,
-        mode=mode,
-        auto_compact_deltas=auto_compact_deltas,
-        auto_compact_delta_rows=auto_compact_delta_rows,
-        expire_keep=expire_keep,
-        quarantine_dir=quarantine_dir,
-        patches=patches,
-        lineage_compact_every=lineage_compact_every,
-        audit=audit,
-    )
+    return run_stream_from(src, table, checkpoint_dir, available_now=True, **apply_kw)
 
 
 def rate_source_events(spark: SparkSession, rows_per_second: int = 1000, n_keys: int = 500) -> DataFrame:

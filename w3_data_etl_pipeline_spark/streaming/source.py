@@ -742,14 +742,11 @@ class LakeTableStreamWriter(DataSourceStreamWriter):
     def commit(self, messages, batchId: int) -> None:
         t = LakeTable(None, self._root)
         files = self._staged(messages)
-        for _ in range(10):
+
+        def attempt() -> int | None:
             snap = t.snapshot()
             if batchId <= snap.get("sink_hwm", -1):
-                _trace(f"sink commit {batchId}: replay no-op")
-                self._cleanup(files)
-                return
-            if not files:
-                entries: list = []
+                return None  # replay
             version = snap["version"] + 1
             rel = os.path.join("data", f"c{version:012d}-{uuid.uuid4().hex[:8]}")
             entries = []
@@ -774,17 +771,20 @@ class LakeTableStreamWriter(DataSourceStreamWriter):
                 operation="stream-sink",
                 sink_hwm=batchId,
             )
-            try:
-                t._write_snapshot(new)
-            except FileExistsError:
-                # lost the optimistic race: this attempt's linked files
-                # are orphans for the grace-gated scan; re-link against
-                # the winner's successor version
-                continue
-            _trace(f"sink commit {batchId}: v{version}, {len(entries)} files")
-            self._cleanup(files)
-            return
-        raise RuntimeError(f"sink commit lost the version race 10 times (batch {batchId})")
+            # a lost race leaves this attempt's linked files as orphans
+            # for the grace-gated scan; the next attempt re-links them
+            # against the winner's successor version
+            t._write_snapshot(new)
+            return version
+
+        version = t._optimistic(
+            f"sink commit (batch {batchId})", attempt, attempts=t._REBASE_ATTEMPTS
+        )
+        if version is None:
+            _trace(f"sink commit {batchId}: replay no-op")
+        else:
+            _trace(f"sink commit {batchId}: v{version}, {len(files)} files")
+        self._cleanup(files)
 
     def abort(self, messages, batchId: int) -> None:
         self._cleanup(self._staged(messages))
