@@ -12,6 +12,12 @@
   a commit landing between plan and read cannot skew the reader's
   cast plan against the planned schema.
 
+* ``TIMESTAMP '…'`` literals in ``read_where`` strings prune in the
+  bounds' own encoding: a ``T`` separator or a second-precision body
+  no longer sorts past the microsecond-padded bounds and skips every
+  file holding a match;
+* the expression-reference probe restores the caller's log level.
+
 (Generated-column DML/merge_into enforcement — the round's medium
 item — is covered in tests/test_generated_cols.py.)
 """
@@ -141,3 +147,60 @@ def test_join_source_cfg_pinned_per_instance(spark, tmp_path):
         {"left": l.root, "right": r.root, "on": "user_id:user_id", "how": "inner"}
     )._cfg()
     assert c3["rsnap"]["version"] == c1["rsnap"]["version"] + 1
+
+
+def _ts_table(spark, root):
+    """Several files (4 buckets), second-precision timestamps one
+    minute apart from 2024-03-01 10:00:00."""
+    schema = T.StructType(
+        [T.StructField("user_id", T.LongType()), T.StructField("ts", T.TimestampType())]
+    )
+    t = LakeTable.create(spark, root, schema, ["user_id"], n_buckets=4)
+    t.merge(
+        spark.range(0, 40).select(
+            F.col("id").alias("user_id"),
+            (F.lit("2024-03-01 10:00:00").cast("timestamp")
+             + F.make_interval(mins=F.col("id").cast("int"))).alias("ts"),
+            F.lit(1).alias("lsn"),
+            F.lit("U").alias("op"),
+        ),
+        0,
+    )
+    return t
+
+
+@pytest.mark.parametrize(
+    "pred, n",
+    [
+        ("ts >= TIMESTAMP '2024-03-01T10:30:00'", 10),
+        ("ts = TIMESTAMP '2024-03-01T10:07:00'", 1),
+        # the literal equals the smallest bound of its file
+        ("ts = TIMESTAMP '2024-03-01 10:00:00'", 1),
+        ("ts <= TIMESTAMP '2024-03-01 10:00:00.000000'", 1),
+        ("ts < TIMESTAMP '2024-03-01T10:02:00.5'", 3),
+    ],
+)
+def test_timestamp_literal_never_misprunes(spark, tmp_path, pred, n):
+    t = _ts_table(spark, str(tmp_path / "ts"))
+    assert len(t.snapshot()["files"]) > 1
+    assert t.read_where(pred).count() == t.read().filter(pred).count() == n
+
+
+def test_timestamp_literal_still_prunes(spark, tmp_path):
+    t = _ts_table(spark, str(tmp_path / "ts"))
+    t.compact(cluster_by=["ts"], max_records_per_file=10)
+    snap = t.snapshot()
+    kept = t.prune_files(snap, "ts >= TIMESTAMP '2024-03-01T10:30:00'")
+    assert 0 < len(kept) < len(snap["files"])
+
+
+def test_expr_refs_restores_the_callers_log_level(spark, tmp_path):
+    t = LakeTable.create(spark, str(tmp_path / "g"), SCHEMA, ["user_id"], n_buckets=4)
+    sc = spark.sparkContext
+    root = sc._jvm.org.apache.logging.log4j.LogManager.getRootLogger()
+    sc.setLogLevel("ERROR")
+    try:
+        t.add_column("g", "string", generated_as="upper(event_type)")
+        assert root.getLevel().toString() == "ERROR"
+    finally:
+        sc.setLogLevel("WARN")

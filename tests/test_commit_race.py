@@ -9,12 +9,12 @@ order) and a table opened by a relative root surviving a ``chdir``."""
 
 from __future__ import annotations
 
-import pandas as pd
 import pytest
 from pyspark.sql import Row
 from pyspark.sql import types as T
 
 from w3_data_etl_pipeline_spark.plans.laketable import CommitConflictError, LakeTable
+from w3_data_etl_pipeline_spark.session import local_frame
 from w3_data_etl_pipeline_spark.streaming.cdc import apply_batch
 from w3_data_etl_pipeline_spark.streaming.source import LakeTableStreamWriter
 
@@ -37,15 +37,6 @@ EVENT_SCHEMA = T.StructType(
         T.StructField("content", T.StringType()),
     ]
 )
-
-
-def _frame(spark, rows, schema):
-    """A DataFrame over local rows, built through Arrow: unlike a list,
-    a pandas frame does not send every action through a Python worker."""
-    return spark.createDataFrame(
-        pd.DataFrame.from_records([tuple(r) for r in rows], columns=schema.fieldNames()),
-        schema,
-    )
 
 
 @pytest.fixture
@@ -96,13 +87,13 @@ def base_table(spark, tmp_path_factory):
     root = str(tmp_path_factory.mktemp("race") / "base")
     t = LakeTable.create(spark, root, SCHEMA, ["id"], n_buckets=4)
     rows = [Row(id=i, lang=("py", "go", None)[i % 3], content=f"c{i}", n=i) for i in range(40)]
-    t.overwrite(_frame(spark, rows, SCHEMA), lsn=1)
+    t.overwrite(local_frame(spark, rows, SCHEMA), lsn=1)
     t.add_constraint("n_nonneg", "n >= 0")
     return t
 
 
 def _source(spark):
-    return _frame(
+    return local_frame(
         spark,
         [Row(id=1, lang="rs", content="m1", n=100), Row(id=99, lang="rs", content="m99", n=99)],
         SCHEMA,
@@ -247,7 +238,7 @@ def test_every_attempt_lost_raises_conflict(spark, tmp_path, base_table, racer, 
 def _rename_setup(spark, root):
     t = LakeTable.create(spark, root, SCHEMA, ["id"], n_buckets=4)
     rows = [Row(id=i, lang=("py", "go")[i % 2], content=f"c{i}", n=i) for i in range(200)]
-    t.overwrite(_frame(spark, rows, SCHEMA), lsn=1)
+    t.overwrite(local_frame(spark, rows, SCHEMA), lsn=1)
     # 300 events over keys 100..249: updates to live keys, inserts past
     # 199, deletes of every 7th key; lang is NULL on every third event
     events = [
@@ -260,7 +251,7 @@ def _rename_setup(spark, root):
         )
         for i in range(300)
     ]
-    return t, _frame(spark, events, EVENT_SCHEMA)
+    return t, local_frame(spark, events, EVENT_SCHEMA)
 
 
 def _state(t):

@@ -19,6 +19,7 @@ from pyspark.sql import types as T
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from w3_data_etl_pipeline_spark.plans.laketable import LakeTable  # noqa: E402
+from w3_data_etl_pipeline_spark.session import local_frame  # noqa: E402
 from w3_data_etl_pipeline_spark.streaming.joinview import (  # noqa: E402
     create_join_view,
     sync_join_view,
@@ -41,16 +42,18 @@ RS = T.StructType(
 
 
 def _lev(spark, ids, et="a", lsn=1, op="U"):
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(i, et, float(i % 97), i + lsn * 10**6, op) for i in ids],
-        ["user_id", "event_type", "value", "lsn", "op"],
+        "user_id long, event_type string, value double, lsn long, op string",
     )
 
 
 def _rev(spark, ids, seg="s1", lsn=1, op="U"):
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(i, seg, i + lsn * 10**6, op) for i in ids],
-        ["c_custkey", "c_mktsegment", "lsn", "op"],
+        "c_custkey long, c_mktsegment string, lsn long, op string",
     )
 
 
@@ -237,9 +240,10 @@ def test_view_joins_a_third_table_via_spj(spark, tmp_path):
         ["uid"], n_buckets=8,
     )
     third.merge(
-        spark.createDataFrame(
+        local_frame(
+            spark,
             [(i, "odd" if i % 2 else "even", i, "U") for i in range(0, 300, 3)],
-            ["uid", "flag", "lsn", "op"],
+            "uid long, flag string, lsn long, op string",
         ),
         0,
     )

@@ -22,6 +22,7 @@ import pytest
 from pyspark.sql import types as T
 
 from w3_data_etl_pipeline_spark.plans.laketable import LakeTable
+from w3_data_etl_pipeline_spark.session import local_frame
 from w3_data_etl_pipeline_spark.streaming.source import LakeTableBatchSource
 
 KEYS = list(range(14))
@@ -119,7 +120,7 @@ def _check(t, model, prev_ids, step):
         sem = {
             r["k"]: r.asDict()
             for r in t.read_semi(
-                t.spark.createDataFrame([(k,) for k in probe], "k long")
+                local_frame(t.spark, [(k,) for k in probe], "k long")
             ).collect()
         }
         want_sem = {k for k in probe if k in model.rows}
@@ -135,7 +136,7 @@ def _check(t, model, prev_ids, step):
         got_in = {
             r["k"]
             for r in t.read_in(
-                "v", t.spark.createDataFrame([(x,) for x in vs], "v string")
+                "v", local_frame(t.spark, [(x,) for x in vs], "v string")
             ).collect()
         }
         want_in = {k for k, r in model.rows.items() if r["v"] in vs}
@@ -198,7 +199,7 @@ def test_random_lifecycle_matches_model(spark, tmp_path, seed):
                 acts.append(("U", k, vals))
         ddl = "k long, " + "".join(f"`{c}` string, " for c in supplied) + \
               "lsn long, op string"
-        t.merge(spark.createDataFrame(rows, ddl), batch_id=1000 + lsn, mode=mode)
+        t.merge(local_frame(spark, rows, ddl), batch_id=1000 + lsn, mode=mode)
         v = t.current_version()
         for op, k, vals in acts:
             if op == "D":

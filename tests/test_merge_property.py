@@ -15,6 +15,7 @@ from pyspark.sql import types as T
 from w3_data_etl_pipeline_spark import oracle
 from w3_data_etl_pipeline_spark.plans.laketable import LakeTable
 from w3_data_etl_pipeline_spark.schemas import SOURCE_FILES
+from w3_data_etl_pipeline_spark.session import local_frame
 
 N_KEYS = 40
 N_EVENTS = 200
@@ -108,10 +109,10 @@ def test_any_batching_converges_to_oracle(spark, tmp_path):
             ["repo", "path"],
             n_buckets=8,
         )
-        t.overwrite(spark.createDataFrame(snap_rows, BOOT_SCHEMA), lsn=0)
+        t.overwrite(local_frame(spark, snap_rows, BOOT_SCHEMA), lsn=0)
         replay_at = rng.randrange(len(batches))
         for i, b in enumerate(batches):
-            df = spark.createDataFrame(b, EVENT_SCHEMA)
+            df = local_frame(spark, b, EVENT_SCHEMA)
             st = t.merge(df, i, mode=mode)
             assert st.applied
             if i == replay_at:
@@ -153,7 +154,7 @@ def test_random_schema_evolution_converges_full_row(spark, tmp_path):
             ["repo", "path"],
             n_buckets=8,
         )
-        t.overwrite(spark.createDataFrame(snap_rows, BOOT_SCHEMA), lsn=0)
+        t.overwrite(local_frame(spark, snap_rows, BOOT_SCHEMA), lsn=0)
         enriched_rows = []  # what the oracle sees: rows AS SENT per batch
         for i in range(n_batches):
             lo, hi = i * per, (i + 1) * per if i < n_batches - 1 else len(event_rows)
@@ -168,7 +169,7 @@ def test_random_schema_evolution_converges_full_row(spark, tmp_path):
                 for r in batch_rows:
                     r[name] = fn(r["lsn"])
             enriched_rows.extend(dict(r) for r in batch_rows)
-            df = spark.createDataFrame(batch_rows, T.StructType(fields))
+            df = local_frame(spark, batch_rows, T.StructType(fields))
             assert t.merge(df, i, mode=mode).applied
         # serial oracle over the enriched rows (full-row replace)
         state = {}

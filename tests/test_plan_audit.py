@@ -262,3 +262,37 @@ def test_lineage_read_broadcasts_the_inheritance_map(spark, tmp_path):
     assert "BroadcastNestedLoopJoin" not in p and "CartesianProduct" not in p
     # exactly the join's broadcast exchange moves data for lineage
     assert p.count("Exchange") == p.count("BroadcastExchange")
+
+
+def test_point_reads_and_literal_frames_plan_no_python_rdd(spark, tmp_path):
+    """Point lookups, small runtime-filter reads, the row-lineage map
+    and the queries' literal dimensions are local relations the JVM
+    serves alone: a frame built from a Python list plans a
+    ``Scan ExistingRDD`` whose every action runs Python-worker tasks."""
+    from pyspark.sql import types as T
+
+    from w3_data_etl_pipeline_spark import queries_olap, queries_ref
+    from w3_data_etl_pipeline_spark.plans.laketable import LakeTable
+
+    t = LakeTable.create(
+        spark, str(tmp_path / "py"),
+        T.StructType([T.StructField("k", T.LongType()),
+                      T.StructField("v", T.StringType())]),
+        ["k"], n_buckets=4, row_lineage=True,
+    )
+    t.merge(
+        spark.range(0, 20).selectExpr(
+            "id AS k", "CAST(id AS STRING) AS v", "id AS lsn", "'I' AS op"
+        ),
+        1,
+    )
+    keys = spark.createDataFrame([(3,), (7,)], "k long")
+    plans = {
+        "read_keys": t.read_keys([(3,), (7,)]),
+        "read_semi": t.read_semi(keys),
+        "include_lineage": t.read(include_lineage=True),
+        "range_join_bands": queries_olap.range_join_bands(spark, SF_DIR),
+        "ua_enrich_traffic": queries_ref.ua_enrich_traffic(spark, SF_DIR),
+    }
+    for name, df in plans.items():
+        assert "ExistingRDD" not in _plan(df), name

@@ -7,7 +7,9 @@ surface."""
 
 from __future__ import annotations
 
+import datetime
 import random
+from decimal import Decimal
 
 import pytest
 from pyspark.sql import functions as F
@@ -15,6 +17,7 @@ from pyspark.sql import types as T
 
 from w3_data_etl_pipeline_spark.functions.xxh64 import bucket_of, spark_xxhash64
 from w3_data_etl_pipeline_spark.plans.laketable import LakeTable
+from w3_data_etl_pipeline_spark.session import local_frame
 from w3_data_etl_pipeline_spark.streaming.source import (
     LakeTableBatchSource,
     LakeTableStreamWriter,
@@ -54,26 +57,90 @@ def _drain_files(spark, src_glob, schema_ddl, root, ckpt):
     q.awaitTermination(120)
 
 
+# every type the twin encodes differently (4-byte ints, 8-byte longs,
+# float/double bits, short and long decimals, text and bytes), with the
+# edge values Spark normalizes: -0.0, NaN, negative decimals, NULL
+HASH_TYPES = {
+    "bo": T.BooleanType(),
+    "by": T.ByteType(),
+    "sh": T.ShortType(),
+    "i": T.IntegerType(),
+    "l": T.LongType(),
+    "f": T.FloatType(),
+    "d": T.DoubleType(),
+    "dt": T.DateType(),
+    "ts": T.TimestampType(),
+    "ntz": T.TimestampNTZType(),
+    "dec": T.DecimalType(10, 2),
+    "big": T.DecimalType(30, 3),
+    "s": T.StringType(),
+    "bin": T.BinaryType(),
+}
+
+
+def _hash_row(rng):
+    base = datetime.datetime(2024, 1, 1)
+    return (
+        rng.random() < 0.5,
+        rng.randint(-128, 127),
+        rng.randint(-(2**15), 2**15 - 1),
+        rng.randint(-(2**31), 2**31 - 1),
+        rng.randint(-(2**62), 2**62),
+        rng.choice([rng.uniform(-1e6, 1e6), -0.0, 0.0, float("nan")]),
+        rng.choice([rng.uniform(-1e12, 1e12), -0.0, 0.0, float("nan")]),
+        datetime.date(1960, 1, 1) + datetime.timedelta(days=rng.randint(0, 40000)),
+        base + datetime.timedelta(microseconds=rng.randint(-(10**15), 10**15)),
+        base + datetime.timedelta(seconds=rng.randint(-(10**9), 10**9)),
+        Decimal(rng.randint(-(10**10) + 1, 10**10 - 1)).scaleb(-2),
+        Decimal(rng.randint(-(10**30) + 1, 10**30 - 1)).scaleb(-3),
+        "".join(rng.choice("abz/._é-0") for _ in range(rng.randint(0, 40))),
+        bytes(rng.randrange(256) for _ in range(rng.randint(0, 40))),
+    )
+
+
 def test_xxhash64_parity_with_spark(spark):
     rng = random.Random(99)
-    longs = [rng.randint(-(2**62), 2**62) for _ in range(100)]
-    strs = [
-        "".join(rng.choice("abz/._é-0") for _ in range(rng.randint(0, 40)))
-        for _ in range(100)
-    ]
-    df = spark.createDataFrame(
-        list(zip(longs, strs)), "a long, b string"
-    ).select(
-        "a",
-        "b",
-        F.xxhash64("a").alias("ha"),
-        F.xxhash64("b", "a").alias("hba"),
-        F.pmod(F.xxhash64("a", "b"), F.lit(16)).cast("int").alias("bk"),
+    rows = [_hash_row(rng) for _ in range(100)] + [(None,) * len(HASH_TYPES)]
+    schema = T.StructType([T.StructField(c, t) for c, t in HASH_TYPES.items()])
+    cols = list(HASH_TYPES)
+    df = local_frame(spark, rows, schema).select(
+        *cols,
+        *[F.xxhash64(c).alias(f"h_{c}") for c in cols],
+        F.xxhash64(*cols).alias("h_all"),
+        F.xxhash64("s", "l").alias("h_sl"),
+        F.pmod(F.xxhash64("i", "dt", "dec"), F.lit(16)).cast("int").alias("bk"),
     )
+    types = list(HASH_TYPES.values())
+    t = HASH_TYPES
     for r in df.collect():
-        assert spark_xxhash64([r["a"]]) == r["ha"]
-        assert spark_xxhash64([r["b"], r["a"]]) == r["hba"]
-        assert bucket_of([r["a"], r["b"]], 16) == r["bk"]
+        for c in cols:
+            assert spark_xxhash64([r[c]], [t[c]]) == r[f"h_{c}"], (c, r[c])
+        assert spark_xxhash64([r[c] for c in cols], types) == r["h_all"]
+        assert spark_xxhash64([r["s"], r["l"]], [t["s"], t["l"]]) == r["h_sl"]
+        assert bucket_of(
+            [r["i"], r["dt"], r["dec"]], [t["i"], t["dt"], t["dec"]], 16
+        ) == r["bk"]
+
+
+def test_sink_and_merge_agree_on_int_key_bucket(reg, spark, tmp_path):
+    """An ``int`` key hashes as Spark's 4-byte ``hashInt``: a sink row
+    bucketed as a long would land beside, not over, the merged row of
+    the same key — a point read would miss it and compaction would
+    keep both."""
+    root = str(tmp_path / "t")
+    ddl = "k int, v string, lsn long, op string"
+    t = LakeTable.create(
+        spark, root,
+        T.StructType([T.StructField("k", T.IntegerType()), T.StructField("v", T.StringType())]),
+        ["k"], n_buckets=8,
+    )
+    t.merge(local_frame(spark, [(k, "merged", 1, "U") for k in range(20)], ddl), 0)
+    w = LakeTableStreamWriter(root, T.StructType.fromDDL(ddl))
+    w.commit([w.write(iter(local_frame(spark, [(3, "sink", 2, "U")], ddl).collect()))], 0)
+    assert [r["v"] for r in t.read_keys([(3,)]).collect()] == ["sink"]
+    t.compact(min_deltas=1, min_delta_rows=1)
+    assert [r["v"] for r in t.read().filter("k = 3").collect()] == ["sink"]
+    assert t.read().count() == 20
 
 
 def test_sink_matches_merge_twin(reg, spark, tmp_path):

@@ -1,7 +1,8 @@
 """HTTP status enrichment (reference operators P12/P13).
 
 Phrase/description come from a tiny static lookup table built once on
-the driver from ``http.HTTPStatus`` and broadcast-joined (the
+the driver from ``http.HTTPStatus`` (an Arrow-built local relation, so
+no Python worker serves it) and broadcast-joined (the
 reference calls HTTPStatus(code) per row,
 reference src/common_package/status_code_tasks.py:67-76; unknown
 codes -> NULL). The class banding replicates the reference's ordered
@@ -15,13 +16,17 @@ from http import HTTPStatus
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import local_frame
+
 
 def status_lookup_df(spark: SparkSession) -> DataFrame:
     rows = [
         (int(s.value), s.phrase, s.description or None)
         for s in HTTPStatus
     ]
-    return spark.createDataFrame(rows, "status_code int, code_phrase string, code_description string")
+    return local_frame(
+        spark, rows, "status_code int, code_phrase string, code_description string"
+    )
 
 
 def status_class(code: F.Column) -> F.Column:

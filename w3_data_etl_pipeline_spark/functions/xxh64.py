@@ -1,28 +1,45 @@
-"""Spark-compatible xxHash64 in pure Python (+ a numpy fast path).
+"""Spark-compatible xxHash64 in pure Python.
 
-The streaming SINK (streaming/source.py, LakeTableStreamSink) must
-assign each incoming row to its key bucket on EXECUTORS, where no
-SparkSession exists — and the bucket function is
+Two callers need Spark's bucket function,
 ``pmod(xxhash64(*keys), n_buckets)`` with Spark's seed-42 chained
-column hashing (plans/laketable.py _bucket_expr). A row hashed into
-the wrong bucket silently duplicates its key (see _align_keys), so
-this twin must be BIT-EXACT with Spark's `XXH64`:
+column hashing (plans/laketable.py ``_bucket_expr``), without running
+a Spark job: the streaming SINK (streaming/source.py,
+LakeTableStreamWriter) assigns each row to its bucket on EXECUTORS,
+where no SparkSession exists, and ``LakeTable.read_keys`` /
+``read_semi`` hash their lookup keys on the driver. A row hashed into
+the wrong bucket silently duplicates its key (see _align_keys) and a
+lookup hashed into the wrong bucket silently misses it, so this twin
+must be BIT-EXACT with Spark's ``XxHash64`` expression:
 
 * one column: ``xxh64(encoded, seed=42)``
 * chained columns: each column's hash seeds the next
   (``hash = xxh64(col_i, seed=hash_prev)``), NULL columns skipped
-* integral types encode as 8-byte little-endian longs (Spark hashes
-  byte/short/int/long all through ``hashLong``; its specialized
-  hashLong is algebraically the standard XXH64 of the 8-byte block)
-* strings encode as UTF-8, doubles as IEEE bits via ``hashLong``
+* the encoding depends on the column's Spark TYPE, not on the Python
+  value (an ``int`` key hashes differently from a ``bigint`` key of
+  the same value), applied to the value's internal form
+  (``DataType.toInternal``: days for dates, micros for timestamps):
 
-Parity is pytest-pinned against ``F.xxhash64`` over randomized longs
-and strings (tests/test_stream_sink.py) — the definitive oracle.
+  - boolean, byte, short, int, date: 4-byte little-endian int
+    (``hashInt``; a boolean as 1/0)
+  - bigint, timestamp, timestamp_ntz: 8-byte little-endian long
+    (``hashLong``)
+  - float / double: the IEEE bits as int / long, with ``-0.0``
+    normalized to ``0.0`` and NaN to its canonical bits
+  - decimal(p, s): the unscaled value as a long when p <= 18, else
+    the unscaled value's minimal big-endian two's-complement bytes
+    (``BigInteger.toByteArray``)
+  - string: UTF-8 bytes; binary: the raw bytes
+
+Parity is pytest-pinned against ``F.xxhash64`` for every one of these
+types (tests/test_stream_sink.py) — the definitive oracle.
 """
 
 from __future__ import annotations
 
+import decimal
 import struct
+
+from pyspark.sql import types as T
 
 _M = (1 << 64) - 1
 _P1 = 0x9E3779B185EBCA87
@@ -95,31 +112,64 @@ def _signed(u: int) -> int:
     return u - (1 << 64) if u >= (1 << 63) else u
 
 
-def spark_xxhash64(values, seed: int = 42) -> int:
-    """Spark's ``xxhash64(col1, col2, ...)`` for one row: chained
-    seeds, NULLs skipped, SIGNED 64-bit result. Supports int (as
-    long), float (as IEEE-bits long), str and bytes values."""
+_INT4 = (T.BooleanType, T.ByteType, T.ShortType, T.IntegerType, T.DateType)
+_INT8 = (T.LongType, T.TimestampType, T.TimestampNTZType)
+_DEC_CTX = decimal.Context(prec=80)
+
+
+def _encode(v, dt: T.DataType) -> bytes:
+    """The bytes Spark's XxHash64 feeds to XXH64 for one non-NULL
+    value ``v`` (internal form) of Spark type ``dt``."""
+    if isinstance(dt, _INT4):
+        return struct.pack("<i", int(v))
+    if isinstance(dt, _INT8):
+        return struct.pack("<q", v)
+    if isinstance(dt, T.FloatType):
+        if v != v:
+            return struct.pack("<I", 0x7FC00000)
+        return struct.pack("<f", 0.0 if v == 0 else v)
+    if isinstance(dt, T.DoubleType):
+        if v != v:
+            return struct.pack("<Q", 0x7FF8000000000000)
+        return struct.pack("<d", 0.0 if v == 0 else v)
+    if isinstance(dt, T.DecimalType):
+        unscaled = int(
+            decimal.Decimal(v)
+            .scaleb(dt.scale, _DEC_CTX)
+            .to_integral_value(decimal.ROUND_HALF_UP, _DEC_CTX)
+        )
+        if dt.precision <= 18:
+            return struct.pack("<q", unscaled)
+        bits = (unscaled if unscaled >= 0 else ~unscaled).bit_length()
+        return unscaled.to_bytes(bits // 8 + 1, "big", signed=True)
+    if isinstance(dt, T.StringType):
+        return v.encode("utf-8")
+    if isinstance(dt, T.BinaryType):
+        return bytes(v)
+    raise TypeError(f"spark_xxhash64 does not support key type {dt.simpleString()}")
+
+
+def spark_xxhash64(values, types, seed: int = 42) -> int:
+    """Spark's ``xxhash64(col1, col2, ...)`` for one row: ``values``
+    as Python returns them from Spark (dates, datetimes, Decimals,
+    ...), ``types`` their columns' Spark DataTypes. Chained seeds,
+    NULLs skipped, SIGNED 64-bit result."""
     h = seed & _M
-    for v in values:
+    for v, dt in zip(values, types, strict=True):
         if v is None:
             continue
-        if isinstance(v, bool):
-            enc = struct.pack("<q", 1 if v else 0)
-        elif isinstance(v, int):
-            enc = struct.pack("<q", v)
-        elif isinstance(v, float):
-            enc = struct.pack("<q", struct.unpack("<q", struct.pack("<d", v))[0])
-        elif isinstance(v, str):
-            enc = v.encode("utf-8")
-        elif isinstance(v, (bytes, bytearray)):
-            enc = bytes(v)
-        else:
-            raise TypeError(f"unhashable key type for spark_xxhash64: {type(v)}")
+        try:
+            enc = _encode(dt.toInternal(v), dt)
+        except (struct.error, AttributeError, ValueError, OverflowError,
+                decimal.InvalidOperation) as e:
+            raise TypeError(
+                f"cannot hash {v!r} as a {dt.simpleString()} key: {e}"
+            ) from None
         h = xxh64(enc, h)
     return _signed(h)
 
 
-def bucket_of(values, n_buckets: int, seed: int = 42) -> int:
+def bucket_of(values, types, n_buckets: int, seed: int = 42) -> int:
     """``pmod(xxhash64(*keys), n_buckets)`` — LakeTable._bucket_expr's
     exact bucket assignment, computed without a SparkSession."""
-    return spark_xxhash64(values, seed) % n_buckets
+    return spark_xxhash64(values, types, seed) % n_buckets

@@ -67,6 +67,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..session import local_frame
+
 META_COLS = {"op", "lsn", "event_ts", "_bucket"}
 LSN_COL = "_lsn"
 OP_COL = "_op"  # persisted only in merge-on-read delta files
@@ -927,8 +929,10 @@ class LakeTable:
         refs = set()
         # the negative probes RAISE analysis errors by design — mute
         # Spark's ERROR-level SQLQueryContextLogger JSON spew for the
-        # duration (single-driver; restored immediately)
+        # duration (single-driver; the caller's level is restored)
         sc = spark.sparkContext
+        root = sc._jvm.org.apache.logging.log4j.LogManager.getRootLogger()
+        level = root.getLevel().toString()
         sc.setLogLevel("FATAL")
         try:
             for f_ in schema.fields:
@@ -937,7 +941,7 @@ class LakeTable:
                 except Exception:
                     refs.add(f_.name)
         finally:
-            sc.setLogLevel("WARN")
+            sc.setLogLevel(level)
         if len(cache) >= 256:
             cache.pop(next(iter(cache)))
         cache[ck] = frozenset(refs)
@@ -1153,7 +1157,7 @@ class LakeTable:
         predicate pruning anyway — resolution needs them whole).
         ``read_keys``' row-group In()-skip gets less effective (rows
         are no longer key-sorted inside base files); its correctness
-        is unaffected (the semi join is the authority).
+        is unaffected (its exact key filter is the authority).
 
         ``cols=None`` clears the order. Metadata-only commit,
         optimistic retry. Versioned like constraints: time travel and
@@ -1437,7 +1441,8 @@ class LakeTable:
                         int(m.group(1)) if m else None,
                     )
                 )
-            lmap = self.spark.createDataFrame(
+            lmap = local_frame(
+                self.spark,
                 lin_rows or [(None, None, None)],
                 "_lkey string, _frid long, _fseq long",
             )
@@ -1603,49 +1608,53 @@ class LakeTable:
 
     def read_keys(self, keys: list[tuple], version: int | None = None) -> DataFrame:
         """Point/batch lookup with BUCKET PRUNING: hash each requested
-        key to its bucket and scan only those buckets' files — at 4096
-        buckets a k-key lookup touches ≤ k/4096 of the table's files,
-        the LakeTable analogue of Iceberg partition pruning. Returns
-        exactly the requested keys' current rows."""
+        key to its bucket on the driver (functions/xxh64.py, bit-exact
+        with ``_bucket_expr``) and scan only those buckets' files — at
+        4096 buckets a k-key lookup touches ≤ k/4096 of the table's
+        files, the LakeTable analogue of Iceberg partition pruning.
+        Inside them an exact key filter (``_key_filter``) runs before
+        MOR resolution: it keeps every version of a wanted key, so
+        last-writer-wins is unchanged. No Spark job runs before the
+        caller's action, and none starts a Python worker. Returns
+        exactly the requested keys' current rows; for a large key set
+        pass a DataFrame to ``read_semi`` instead."""
+        from ..functions.xxh64 import bucket_of
+
         snap = self.snapshot(version)
         key_cols = snap["key_cols"]
-        n = snap["n_buckets"]
-        import pyspark.sql.functions as sf
-
-        want_buckets = set()
-        # lookup schema uses the table's ACTUAL key-column types: hashing a
-        # string-typed literal where the stored key is e.g. bigint would
-        # xxhash64 to a different bucket and silently prune the right one
         schema = self.schema(snap)
-        lookup_schema = T.StructType([schema[c] for c in key_cols])
-        lookup = self.spark.createDataFrame([tuple(k) for k in keys], lookup_schema)
-        for r in lookup.select(
-            sf.pmod(sf.xxhash64(*[sf.col(c) for c in key_cols]), sf.lit(n)).cast("int").alias("b")
-        ).distinct().collect():
-            want_buckets.add(r["b"])
-        files = [f for f in snap["files"] if f["bucket"] in want_buckets]
+        types = [schema[c].dataType for c in key_cols]
+        keys = [tuple(k) for k in keys]
+        want = {bucket_of(k, types, snap["n_buckets"]) for k in keys}
+        files = [f for f in snap["files"] if f["bucket"] in want]
         df, has_delta = self._scan(files, snap)
-        # ROW-GROUP SKIPPING inside the surviving buckets: merge writes
-        # each bucket's rows key-sorted (_first_per_key's window sort
-        # is (_bucket, keys asc, ...) and the partitioned write keeps
-        # it), so parquet row-group min/max stats on the key columns
-        # are tight. Pushing per-column In() filters (a SUPERSET of the
-        # requested tuples — every row of a wanted key passes, so
-        # MOR resolution below stays correct; the semi join is the
-        # authority) lets the scan skip row groups footer-only. Guarded
-        # to small lookup sets: a giant In() list costs more in filter
-        # eval than it saves.
-        if len(keys) <= 256:
-            cond = None
-            for i, c in enumerate(key_cols):
-                vals = sorted({k[i] for k in keys})
-                f_ = F.col(c).isin(vals)
-                cond = f_ if cond is None else cond & f_
-            df = df.filter(cond)
+        df = df.filter(self._key_filter(key_cols, types, keys))
         if has_delta:
             df = self._resolve(df, snap)
-        df = df.drop(LSN_COL, OP_COL)
-        return df.join(F.broadcast(lookup), key_cols, "left_semi")
+        return df.drop(LSN_COL, OP_COL)
+
+    @staticmethod
+    def _key_filter(key_cols: list, types: list, keys: list) -> F.Column:
+        """Exact Catalyst test for ``keys`` (tuples in ``key_cols``
+        order, values typed by ``types``). A per-column ``isin`` reaches
+        the parquet reader as a pushed ``In``, so key-sorted bucket
+        files skip row groups footer-only; for compound keys one
+        struct ``isin`` then rejects the cross product of the
+        per-column lists (asking for (a1,b2) and (a2,b1) must not
+        return (a1,b1)). NULL key values match nothing, as in a join."""
+        cond = None
+        for i, (c, t) in enumerate(zip(key_cols, types)):
+            vals = dict.fromkeys(k[i] for k in keys if k[i] is not None)
+            e = F.col(c).isin([F.lit(v).cast(t) for v in vals])
+            cond = e if cond is None else cond & e
+        if len(key_cols) > 1:
+            cond = cond & F.struct(*key_cols).isin(
+                [
+                    F.struct(*[F.lit(v).cast(t).alias(c) for v, t, c in zip(k, types, key_cols)])
+                    for k in dict.fromkeys(keys)
+                ]
+            )
+        return cond
 
     def _semi_prune(
         self, keys_df: DataFrame, snap: dict, probe_limit: int
@@ -1657,19 +1666,22 @@ class LakeTable:
         different bucket and silently prune the right one — same
         hazard ``read_keys`` guards against). When the distinct key
         set fits ``probe_limit`` the keys are additionally REBUILT as
-        a literal DataFrame from the single collected sample, so a
-        non-deterministic input plan (unordered limit, sample) cannot
-        diverge between the pruning decision and the closing semi
-        join; past the limit the projected plan is re-evaluated by
-        the bucket job and the caller's join — a non-deterministic
+        a literal DataFrame (``local_frame``: an Arrow-built local
+        relation, no Python worker) from the single collected sample,
+        so a non-deterministic input plan (unordered limit, sample)
+        cannot diverge between the pruning decision and the closing
+        semi join; past the limit the projected plan is re-evaluated
+        by the bucket job and the caller's join — a non-deterministic
         large keys_df must be materialized by the caller. Two stages:
 
         1. BUCKET pruning (always): hash the distinct keys to bucket
-           ids — one tiny Spark job whose driver-side result is at
-           most ``n_buckets`` ints — and keep only those buckets'
-           files. Exact, never over-prunes: a key lives in exactly
-           one bucket, and keeping the bucket keeps EVERY version of
-           the key, so MOR last-writer-wins resolution is untouched.
+           ids — on the driver from the sample when it fits
+           ``probe_limit`` (functions/xxh64.py), else by one Spark job
+           whose driver-side result is at most ``n_buckets`` ints —
+           and keep only those buckets' files. Exact, never
+           over-prunes: a key lives in exactly one bucket, and keeping
+           the bucket keeps EVERY version of the key, so MOR
+           last-writer-wins resolution is untouched.
         2. FILE refinement (only when the distinct key set fits
            ``probe_limit``): evaluate a per-column OR-of-equalities
            tree through ``prune_files`` so the surviving buckets'
@@ -1683,6 +1695,7 @@ class LakeTable:
 
         Returns (keys, files, sampled_keys, small, want_buckets,
         bucket_stage_file_count)."""
+        from ..functions.xxh64 import bucket_of
         from .predicate import And, Or, Pred
 
         schema = self.schema(snap)
@@ -1696,22 +1709,22 @@ class LakeTable:
             .distinct()
         )
         sample = keys.limit(probe_limit + 1).collect()
-        small = 0 < len(sample) <= probe_limit
-        if small:
-            lookup_schema = T.StructType([schema[c] for c in key_cols])
-            keys = self.spark.createDataFrame(
-                [tuple(r[c] for c in key_cols) for r in sample], lookup_schema
+        fits = len(sample) <= probe_limit
+        small = fits and bool(sample)
+        if fits:
+            rows = [tuple(r[c] for c in key_cols) for r in sample]
+            types = [schema[c].dataType for c in key_cols]
+            want = {bucket_of(k, types, n) for k in rows}
+            keys = local_frame(
+                self.spark, rows, T.StructType([schema[c] for c in key_cols])
             )
-        want = {
-            r["b"]
-            for r in keys.select(
-                F.pmod(F.xxhash64(*[F.col(c) for c in key_cols]), F.lit(n))
-                .cast("int")
-                .alias("b")
-            )
-            .distinct()
-            .collect()
-        }
+        else:
+            want = {
+                r["b"]
+                for r in keys.select(self._bucket_expr(snap).alias("b"))
+                .distinct()
+                .collect()
+            }
         files = [
             f
             for f in snap["files"]
@@ -1957,7 +1970,8 @@ class LakeTable:
         self, keys_df: DataFrame, version: int | None = None, probe_limit: int = 1024
     ) -> dict:
         """Dry-run ``read_semi``'s pruning decision — no data file is
-        opened (only the tiny key-hash job runs). Reports the bucket
+        opened (only the key sample is collected, plus the key-hash
+        job past ``probe_limit``). Reports the bucket
         stage and the bounds/equality-index refinement separately so
         an operator can see WHICH lever pruned (and whether adding an
         equality index on the key columns would help)."""

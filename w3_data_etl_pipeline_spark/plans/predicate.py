@@ -30,10 +30,12 @@ Grammar (case-insensitive keywords):
                | ident BETWEEN literal AND literal
     op       := '=' | '==' | '<' | '<=' | '>' | '>='
     literal  := number | 'single-quoted string' | TRUE | FALSE
+               | TIMESTAMP 'iso' | DATE 'iso'   (space or 'T' separator)
 """
 
 from __future__ import annotations
 
+import datetime as _dt
 import re
 from dataclasses import dataclass
 
@@ -157,13 +159,20 @@ class _Parser:
         if k == "kw" and v in ("TRUE", "FALSE"):
             return v == "TRUE"
         if k == "ident" and isinstance(v, str) and v.upper() in ("TIMESTAMP", "DATE"):
-            # ANSI typed literals: TIMESTAMP '...' / DATE '...' — the
-            # manifest bounds are ISO-8601 strings with the same
-            # ordering, so the quoted body IS the comparable value
+            # ANSI typed literals: TIMESTAMP '...' / DATE '...' parse
+            # to datetime/date, which pruning encodes like the
+            # manifest bounds (LakeTable._json_bound). The raw body
+            # would compare as text: a 'T' separator sorts after every
+            # same-day bound, a second-precision body before the
+            # microsecond-padded bound equal to it.
             k2, v2 = self._next()
             if k2 != "lit" or not isinstance(v2, str):
                 raise ParseError(f"expected string after {v}")
-            return v2
+            parse = _dt.date if v.upper() == "DATE" else _dt.datetime
+            try:
+                return parse.fromisoformat(v2.strip())
+            except ValueError:
+                raise ParseError(f"unsupported {v.upper()} literal {v2!r}") from None
         raise ParseError(f"expected literal, got {v!r}")
 
     def _predicate(self):

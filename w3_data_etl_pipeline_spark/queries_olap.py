@@ -8,6 +8,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .queries import _money, q, t
+from .session import local_frame
 
 SESSION_GAP_S = 1800
 
@@ -290,7 +291,7 @@ def range_join_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     plans BroadcastNestedLoopJoin — correct here because the build side
     is O(10); at scale a bands table stays tiny so the plan holds."""
     e = t(spark, sf_dir, "events")
-    bands = spark.createDataFrame(_RANGE_BANDS, "lo double, hi double, label string")
+    bands = local_frame(spark, _RANGE_BANDS, "lo double, hi double, label string")
     return (
         e.join(F.broadcast(bands), (e.value >= bands.lo) & (e.value < bands.hi))
         .groupBy("label")

@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 from .functions import bands
 from .functions.ua import classify_ua_exprs, classify_ua_pdf
 from .queries import q, t
+from .session import local_frame
 
 # ---------------------------------------------------------------------------
 # J3: join + filter (GB-traffic analogue over the driver tables)
@@ -164,7 +165,8 @@ def ua_enrich_traffic(spark: SparkSession, sf_dir: str) -> DataFrame:
     (browser, os, device, is_bot) — the reference's
     build-the-dimension-from-DISTINCT trick as plan shape: classify
     the distinct UAs as an 8-ROW DIMENSION (pure-codegen rlike chains,
-    classify_ua_exprs — zero Python anywhere), broadcast-join it onto
+    classify_ua_exprs, over an Arrow-built local relation — no Python
+    UDF and no Python-worker task), broadcast-join it onto
     a count-by-UA-index aggregate of the fact, and re-aggregate. The
     big stage is one partial-agg count over events; the ~50-regex
     chain runs 8 times total. Classifying inline instead (chains in
@@ -175,9 +177,7 @@ def ua_enrich_traffic(spark: SparkSession, sf_dir: str) -> DataFrame:
     builds the oracle LUT, so the driver's value-hash gate enforces
     bit-parity between the two implementations."""
     e = t(spark, sf_dir, "events")
-    dim = spark.createDataFrame(
-        [(i, u) for i, u in enumerate(_UA_POOL)], ["_idx", "_ua"]
-    )
+    dim = local_frame(spark, list(enumerate(_UA_POOL)), "_idx long, _ua string")
     x = classify_ua_exprs(F.col("_ua"))
     dim = dim.select(
         "_idx",

@@ -86,3 +86,34 @@ def get_spark(
     spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def local_frame(spark: SparkSession, rows, schema):
+    """A DataFrame over a few driver-side ``rows`` (tuples in
+    ``schema`` order, or dicts by field name), built through Arrow.
+
+    ``spark.createDataFrame(<list>)`` plans a Python-RDD scan, so every
+    action over it runs Python-worker tasks (about 0.2 s each in local
+    mode); an Arrow table becomes a ``LocalTableScan`` the JVM serves
+    alone. Each value first goes through its field's
+    ``DataType.toInternal`` — what the list path does — so dates,
+    timestamps (naive ones in the driver's local time zone) and
+    decimals land exactly as they would from a list. ``schema`` is a
+    ``StructType`` or a DDL string; flat column types only."""
+    import pyarrow as pa
+    from pyspark.sql import types as T
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
+    arrow = to_arrow_schema(schema)
+    names = schema.fieldNames()
+    rows = [[r[c] for c in names] if isinstance(r, dict) else r for r in rows]
+    cols = [
+        pa.array(
+            [None if r[i] is None else f.dataType.toInternal(r[i]) for r in rows],
+            type=a.type,
+        )
+        for i, (f, a) in enumerate(zip(schema.fields, arrow))
+    ]
+    return spark.createDataFrame(pa.Table.from_arrays(cols, schema=arrow), schema)

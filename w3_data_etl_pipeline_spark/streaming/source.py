@@ -671,9 +671,13 @@ class LakeTableStreamWriter(DataSourceStreamWriter):
             return _SinkFiles([])
         idx = {c: i for i, c in enumerate(self._in_cols)}
         ki = [idx[k] for k in self._keys]
+        # hash as the TABLE's key types: the file stores them so, and
+        # merge/read_keys bucket them so
+        types = dict(self._table_cols)
+        kt = [types[k] for k in self._keys]
         by_bucket: dict[int, list] = {}
         for r in rows:
-            b = bucket_of([r[i] for i in ki], self._n_buckets)
+            b = bucket_of([r[i] for i in ki], kt, self._n_buckets)
             by_bucket.setdefault(b, []).append(r)
 
         attempt = os.path.join(
