@@ -178,6 +178,9 @@ def _ts_table(spark, root):
         ("ts = TIMESTAMP '2024-03-01 10:00:00'", 1),
         ("ts <= TIMESTAMP '2024-03-01 10:00:00.000000'", 1),
         ("ts < TIMESTAMP '2024-03-01T10:02:00.5'", 3),
+        # bodies Spark reads but fromisoformat does not: no pruning
+        ("ts >= TIMESTAMP '2024-03-01 10:30:00 UTC'", 10),
+        ("ts < TIMESTAMP '2024-3-1 10:02:00'", 2),
     ],
 )
 def test_timestamp_literal_never_misprunes(spark, tmp_path, pred, n):
@@ -192,6 +195,14 @@ def test_timestamp_literal_still_prunes(spark, tmp_path):
     snap = t.snapshot()
     kept = t.prune_files(snap, "ts >= TIMESTAMP '2024-03-01T10:30:00'")
     assert 0 < len(kept) < len(snap["files"])
+
+
+def test_join_view_where_accepts_any_spark_timestamp_body(spark, tmp_path):
+    l = _ts_table(spark, str(tmp_path / "l"))
+    r = _ts_table(spark, str(tmp_path / "r"))
+    where = "ts >= TIMESTAMP '2024-03-01 10:30:00 UTC'"
+    got = l.join_bucketed(r, on=[("user_id", "user_id")], where=where)
+    assert got.count() == l.read().filter(where).count() == 10
 
 
 def test_expr_refs_restores_the_callers_log_level(spark, tmp_path):

@@ -1,17 +1,20 @@
 """``LakeTable.read_keys`` — point and small-set lookups: keys hash to
 buckets on the driver (functions/xxh64.py) and an exact Catalyst key
-filter selects them, so the result must equal ``read().filter(...)``
-for every key type the bucket hash encodes differently, on COW and
-MOR state, and a compound-key lookup must not leak the cross product
-of its per-column value lists."""
+filter selects them, so the result must equal the full ``read()``
+filtered on the driver for every key type the bucket hash encodes
+differently, on COW and MOR state, and a compound-key lookup must not
+leak the cross product of its per-column value lists. The parity
+cases run with the driver's local time zone off UTC (the session zone
+stays UTC), where a timestamp literal that crosses py4j as an instant
+would shift."""
 
 from __future__ import annotations
 
 import datetime as dt
+import time
 from decimal import Decimal
 
 import pytest
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from w3_data_etl_pipeline_spark.plans.laketable import LakeTable
@@ -28,8 +31,23 @@ KEY_TYPES = {
         T.TimestampType(),
         lambda i: dt.datetime(2024, 1, 1) + dt.timedelta(seconds=3607 * i, microseconds=11 * i),
     ),
+    "timestamp_ntz": (
+        T.TimestampNTZType(),
+        lambda i: dt.datetime(2024, 1, 1) + dt.timedelta(seconds=3607 * i, microseconds=11 * i),
+    ),
     "decimal(10,2)": (T.DecimalType(10, 2), lambda i: Decimal(i * 1234 - 20_000) / 100),
 }
+
+
+@pytest.fixture
+def driver_tz_off_utc(monkeypatch):
+    """The driver process's local zone at a fixed UTC-5 (a POSIX rule,
+    no zone database needed) for the test, restored after it."""
+    monkeypatch.setenv("TZ", "XST+05")
+    time.tzset()
+    yield
+    monkeypatch.undo()
+    time.tzset()
 
 
 def _events(spark, key_fields, rows):
@@ -49,17 +67,16 @@ def _rows(df):
 
 
 def _matches(t, key_cols, keys):
-    cond = None
-    for k in keys:
-        e = None
-        for c, v in zip(key_cols, k):
-            e = (F.col(c) == F.lit(v)) if e is None else e & (F.col(c) == F.lit(v))
-        cond = e if cond is None else cond | e
-    return _rows(t.read().filter(cond))
+    """The full read filtered on the driver: values come back through
+    ``fromInternal``, so no literal crosses into Spark."""
+    want = set(keys)
+    return sorted(
+        tuple(r) for r in t.read().collect() if tuple(r[c] for c in key_cols) in want
+    )
 
 
 @pytest.mark.parametrize("name", list(KEY_TYPES))
-def test_read_keys_matches_filtered_read(spark, tmp_path, name):
+def test_read_keys_matches_filtered_read(spark, tmp_path, driver_tz_off_utc, name):
     typ, gen = KEY_TYPES[name]
     key = [T.StructField("k", typ)]
     t = LakeTable.create(

@@ -5,8 +5,8 @@ Two callers need Spark's bucket function,
 column hashing (plans/laketable.py ``_bucket_expr``), without running
 a Spark job: the streaming SINK (streaming/source.py,
 LakeTableStreamWriter) assigns each row to its bucket on EXECUTORS,
-where no SparkSession exists, and ``LakeTable.read_keys`` /
-``read_semi`` hash their lookup keys on the driver. A row hashed into
+where no SparkSession exists, and ``LakeTable.read_keys`` hashes its
+lookup keys on the driver. A row hashed into
 the wrong bucket silently duplicates its key (see _align_keys) and a
 lookup hashed into the wrong bucket silently misses it, so this twin
 must be BIT-EXACT with Spark's ``XxHash64`` expression:

@@ -1642,15 +1642,24 @@ class LakeTable:
         struct ``isin`` then rejects the cross product of the
         per-column lists (asking for (a1,b2) and (a2,b1) must not
         return (a1,b1)). NULL key values match nothing, as in a join."""
+
+        def lit(v, t):
+            if isinstance(t, T.TimestampNTZType):
+                # py4j sends a naive datetime as an instant read in the
+                # driver's local zone; the zone-free text casts to the
+                # same wall clock ``toInternal`` (and the bucket) uses
+                return F.lit(v.replace(tzinfo=None).isoformat(sep=" ")).cast(t)
+            return F.lit(v).cast(t)
+
         cond = None
         for i, (c, t) in enumerate(zip(key_cols, types)):
             vals = dict.fromkeys(k[i] for k in keys if k[i] is not None)
-            e = F.col(c).isin([F.lit(v).cast(t) for v in vals])
+            e = F.col(c).isin([lit(v, t) for v in vals])
             cond = e if cond is None else cond & e
         if len(key_cols) > 1:
             cond = cond & F.struct(*key_cols).isin(
                 [
-                    F.struct(*[F.lit(v).cast(t).alias(c) for v, t, c in zip(k, types, key_cols)])
+                    F.struct(*[lit(v, t).alias(c) for v, t, c in zip(k, types, key_cols)])
                     for k in dict.fromkeys(keys)
                 ]
             )
@@ -1675,10 +1684,9 @@ class LakeTable:
         large keys_df must be materialized by the caller. Two stages:
 
         1. BUCKET pruning (always): hash the distinct keys to bucket
-           ids — on the driver from the sample when it fits
-           ``probe_limit`` (functions/xxh64.py), else by one Spark job
-           whose driver-side result is at most ``n_buckets`` ints —
-           and keep only those buckets' files. Exact, never
+           ids — one tiny Spark job whose driver-side result is at
+           most ``n_buckets`` ints, JVM-only over rebuilt keys — and
+           keep only those buckets' files. Exact, never
            over-prunes: a key lives in exactly one bucket, and keeping
            the bucket keeps EVERY version of the key, so MOR
            last-writer-wins resolution is untouched.
@@ -1695,12 +1703,10 @@ class LakeTable:
 
         Returns (keys, files, sampled_keys, small, want_buckets,
         bucket_stage_file_count)."""
-        from ..functions.xxh64 import bucket_of
         from .predicate import And, Or, Pred
 
         schema = self.schema(snap)
         key_cols = snap["key_cols"]
-        n = snap["n_buckets"]
         keys = (
             keys_df.select(
                 *[F.col(c).cast(schema[c].dataType).alias(c) for c in key_cols]
@@ -1709,22 +1715,19 @@ class LakeTable:
             .distinct()
         )
         sample = keys.limit(probe_limit + 1).collect()
-        fits = len(sample) <= probe_limit
-        small = fits and bool(sample)
-        if fits:
-            rows = [tuple(r[c] for c in key_cols) for r in sample]
-            types = [schema[c].dataType for c in key_cols]
-            want = {bucket_of(k, types, n) for k in rows}
+        small = 0 < len(sample) <= probe_limit
+        if small:
             keys = local_frame(
-                self.spark, rows, T.StructType([schema[c] for c in key_cols])
+                self.spark,
+                [tuple(r[c] for c in key_cols) for r in sample],
+                T.StructType([schema[c] for c in key_cols]),
             )
-        else:
-            want = {
-                r["b"]
-                for r in keys.select(self._bucket_expr(snap).alias("b"))
-                .distinct()
-                .collect()
-            }
+        want = {
+            r["b"]
+            for r in keys.select(self._bucket_expr(snap).alias("b"))
+            .distinct()
+            .collect()
+        }
         files = [
             f
             for f in snap["files"]
@@ -1970,10 +1973,9 @@ class LakeTable:
         self, keys_df: DataFrame, version: int | None = None, probe_limit: int = 1024
     ) -> dict:
         """Dry-run ``read_semi``'s pruning decision — no data file is
-        opened (only the key sample is collected, plus the key-hash
-        job past ``probe_limit``). Reports the bucket
-        stage and the bounds/equality-index refinement separately so
-        an operator can see WHICH lever pruned (and whether adding an
+        opened (only the key sample and the tiny key-hash job run).
+        Reports the bucket stage and the bounds/equality-index
+        refinement separately so an operator can see WHICH lever pruned (and whether adding an
         equality index on the key columns would help)."""
         snap = self.snapshot(version)
         _keys, files, sample, small, want, bucket_stage = self._semi_prune(

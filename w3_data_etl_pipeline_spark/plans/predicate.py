@@ -30,7 +30,8 @@ Grammar (case-insensitive keywords):
                | ident BETWEEN literal AND literal
     op       := '=' | '==' | '<' | '<=' | '>' | '>='
     literal  := number | 'single-quoted string' | TRUE | FALSE
-               | TIMESTAMP 'iso' | DATE 'iso'   (space or 'T' separator)
+               | TIMESTAMP 'iso' | DATE 'iso'   (space or 'T' separator;
+                 any other body prunes nothing, see Unparsed)
 """
 
 from __future__ import annotations
@@ -49,6 +50,17 @@ class Pred:
     col: str
     op: str  # one of =, <, <=, >, >=, is_null, is_not_null
     val: object = None
+
+
+@dataclass(frozen=True)
+class Unparsed:
+    """A ``TIMESTAMP``/``DATE`` literal body ``fromisoformat`` cannot
+    read (Spark also accepts, e.g., ``'2024-3-1'`` or a ``' UTC'``
+    suffix). Pruning has no encoding for it, so its leaf keeps every
+    file; the row filter still applies the literal as Spark reads it."""
+
+    kind: str
+    text: str
 
 
 @dataclass
@@ -172,7 +184,7 @@ class _Parser:
             try:
                 return parse.fromisoformat(v2.strip())
             except ValueError:
-                raise ParseError(f"unsupported {v.upper()} literal {v2!r}") from None
+                return Unparsed(v.upper(), v2)
         raise ParseError(f"expected literal, got {v!r}")
 
     def _predicate(self):

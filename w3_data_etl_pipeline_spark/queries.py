@@ -2479,8 +2479,8 @@ def cdc_stream_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     python xxhash64 twin, the driver commits one snapshot per epoch
     with the sink_hwm exactly-once guard. The final resolved state
     must equal the DuckDB LWW replay; in-query asserts pin zero
-    shuffle-side machinery (only delta files added) and point-lookup
-    bucket parity."""
+    shuffle-side machinery (only delta files added), point-lookup
+    bucket parity and the twin's buckets against Spark's."""
     import shutil
     import tempfile
 
@@ -2563,6 +2563,21 @@ def cdc_stream_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         probe = sorted({r["user_id"] for r in rows})[:5]
         if table.read_keys([(k,) for k in probe]).count() != len(probe):
             raise AssertionError("bucket parity broken: point lookup missed")
+        # the sink and read_keys both hash with the Python twin, so the
+        # lookup above cannot see the twin drift from Spark: check the
+        # probe keys' buckets against Spark's own expression
+        from .functions.xxh64 import bucket_of
+        from .session import local_frame
+
+        n = snap["n_buckets"]
+        spark_b = {
+            r["user_id"]: r["b"]
+            for r in local_frame(spark, [(k,) for k in probe], "user_id long")
+            .select("user_id", table._bucket_expr(snap).alias("b"))
+            .collect()
+        }
+        if spark_b != {k: bucket_of((k,), [T.LongType()], n) for k in probe}:
+            raise AssertionError("bucket parity broken: the sink's hash is not Spark's")
         return spark.createDataFrame(rows, schema)
     finally:
         shutil.rmtree(work, ignore_errors=True)
