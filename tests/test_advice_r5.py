@@ -12,10 +12,14 @@
   a commit landing between plan and read cannot skew the reader's
   cast plan against the planned schema.
 
-* ``TIMESTAMP '…'`` literals in ``read_where`` strings prune in the
-  bounds' own encoding: a ``T`` separator or a second-precision body
-  no longer sorts past the microsecond-padded bounds and skips every
+* ``TIMESTAMP '…'`` literals in ``read_where`` strings prune as
+  typed values: a ``T`` separator or a second-precision body no
+  longer sorts past the microsecond-padded bounds and skips every
   file holding a match;
+* a string partition source's default partition holds ``''`` as well
+  as NULL, so its tuple never excludes a file;
+* a ``DATE`` meeting a timestamp (or a ``TIMESTAMP`` meeting a date
+  column) compares as its midnight, in SQL and tuple predicates;
 * the expression-reference probe restores the caller's log level.
 
 (Generated-column DML/merge_into enforcement — the round's medium
@@ -24,6 +28,7 @@ item — is covered in tests/test_generated_cols.py.)
 
 from __future__ import annotations
 
+import datetime as dt
 import os
 
 import pytest
@@ -32,6 +37,7 @@ from pyspark.sql import types as T
 
 from w3_data_etl_pipeline_spark.plans.laketable import LakeTable
 from w3_data_etl_pipeline_spark.plans.sql import LakeCatalog
+from w3_data_etl_pipeline_spark.session import local_frame
 
 SCHEMA = T.StructType(
     [
@@ -215,3 +221,60 @@ def test_expr_refs_restores_the_callers_log_level(spark, tmp_path):
         assert root.getLevel().toString() == "ERROR"
     finally:
         sc.setLogLevel("WARN")
+
+
+def _typed(spark, root, ddl, rows, spec=()):
+    """A keyed table over ``rows`` (``id`` first), one file per row
+    after a clustered rewrite unless a partition ``spec`` splits it."""
+    t = LakeTable.create(spark, root, T.StructType.fromDDL(ddl), ["id"], n_buckets=2)
+    if spec:
+        t.alter_partition_spec(list(spec))
+    t.merge(local_frame(spark, [r + (1, "U") for r in rows], ddl + ", lsn BIGINT, op STRING"), 0)
+    if not spec:
+        t.compact(cluster_by=[ddl.split(",")[1].split()[0]], max_records_per_file=1)
+    return t
+
+
+def _same(t, pred):
+    """read_where(pred) returns exactly read().filter(pred)."""
+    cond = t._pred_cond(pred)
+    got = sorted(map(tuple, t.read_where(pred).collect()))
+    assert got == sorted(map(tuple, t.read().filter(cond).collect()))
+    return len(got)
+
+
+@pytest.mark.parametrize("spec", ["identity(s)", "truncate(s, 2)"])
+@pytest.mark.parametrize(
+    "pred, n", [("s = ''", 2), ("s <= 'a'", 2), ("s IS NOT NULL", 4)]
+)
+def test_empty_string_partition_is_not_null(spark, tmp_path, spec, pred, n):
+    rows = [(1, ""), (2, None), (3, ""), (4, "abc"), (5, None), (6, "b")]
+    t = _typed(spark, str(tmp_path / "s"), "id BIGINT, s STRING", rows, [spec])
+    assert any(f["pt"] == [None] for f in t.snapshot()["files"])
+    assert _same(t, pred) == n
+
+
+_MIDNIGHT = [(1, dt.datetime(2024, 3, 1, 5)), (2, dt.datetime(2024, 3, 2))]
+
+
+@pytest.mark.parametrize(
+    "pred, n",
+    [
+        ("ts <= DATE '2024-03-02'", 2),
+        ("ts = DATE '2024-03-02'", 1),
+        ([("ts", "<=", dt.date(2024, 3, 2))], 2),
+        ([("ts", "=", dt.date(2024, 3, 2))], 1),
+    ],
+)
+def test_date_literal_on_timestamp_column_at_midnight(spark, tmp_path, pred, n):
+    t = _typed(spark, str(tmp_path / "ts"), "id BIGINT, ts TIMESTAMP", _MIDNIGHT)
+    assert len(t.snapshot()["files"]) == 2
+    assert _same(t, pred) == n
+
+
+def test_timestamp_literal_on_date_column(spark, tmp_path):
+    rows = [(1, dt.date(2024, 3, 1)), (2, dt.date(2024, 3, 2))]
+    t = _typed(spark, str(tmp_path / "d"), "id BIGINT, d DATE", rows)
+    assert len(t.snapshot()["files"]) == 2
+    assert _same(t, "d = TIMESTAMP '2024-03-02 00:00:00'") == 1
+    assert _same(t, "d < TIMESTAMP '2024-03-01 00:00:01'") == 1

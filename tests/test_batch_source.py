@@ -168,7 +168,8 @@ def test_partition_tuple_pruning_through_pushed_timestamp_filters(spark, tmp_pat
     reaches the manifest layer and prunes by PARTITION TUPLE: only the
     in-window day's files are admitted — including the exact-boundary
     day, which requires the tz-aware pushed literal and the naive
-    tuple range to share one encoding (_json_bound normalizes)."""
+    tuple range to compare in one typed domain (pruning coerces the
+    literal to naive UTC)."""
     import datetime as dt
 
     from pyspark.sql import types as T

@@ -13,6 +13,7 @@ import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from w3_data_etl_pipeline_spark.plans import pruning
 from w3_data_etl_pipeline_spark.plans.laketable import LakeTable
 
 SCHEMA = T.StructType(
@@ -119,9 +120,13 @@ def test_mor_buckets_exempt_from_pruning(spark, tmp_path):
     assert t.read_where(pred).count() == 0  # all keys updated below 100
 
 
+def _no_bloom(ref, val):
+    return True  # an unresolvable bloom proves nothing
+
+
 def test_pre_stats_entries_never_pruned():
     legacy = {"path": "data/x.parquet", "bucket": 0, "kind": "base"}
-    assert not LakeTable._bound_excludes(legacy, "value", ">=", 100.0)
+    assert not pruning.bound_excludes(legacy, "value", "double", ">=", 100.0, _no_bloom)
     snap = {"files": [legacy]}
     assert LakeTable("spark-unused", "/nonexistent").prune_files(
         snap, [("value", ">=", 100.0)]
@@ -130,7 +135,9 @@ def test_pre_stats_entries_never_pruned():
 
 def test_incomparable_predicate_keeps_file():
     entry = {"cmin": {"value": 1.0}, "cmax": {"value": 2.0}}
-    assert not LakeTable._bound_excludes(entry, "value", ">=", "not-a-number")
+    assert not pruning.bound_excludes(
+        entry, "value", "double", ">=", "not-a-number", _no_bloom
+    )
 
 
 def _null_events(spark, n=2400, keys=320):
@@ -217,11 +224,11 @@ def test_null_ops_combine_with_range_predicates(nullable_clustered):
 
 def test_missing_null_counts_never_prune():
     entry = {"path": "x", "rows": 10, "cmin": {"v": 1}, "cmax": {"v": 5}}
-    assert not LakeTable._bound_excludes(entry, "v", "is_null", None)
-    assert not LakeTable._bound_excludes(entry, "v", "is_not_null", None)
+    assert not pruning.bound_excludes(entry, "v", "long", "is_null", None, _no_bloom)
+    assert not pruning.bound_excludes(entry, "v", "long", "is_not_null", None, _no_bloom)
     with_counts = dict(entry, cnull={"v": 0})
-    assert LakeTable._bound_excludes(with_counts, "v", "is_null", None)
+    assert pruning.bound_excludes(with_counts, "v", "long", "is_null", None, _no_bloom)
     all_null = dict(entry, cnull={"v": 10})
-    assert LakeTable._bound_excludes(all_null, "v", "is_not_null", None)
+    assert pruning.bound_excludes(all_null, "v", "long", "is_not_null", None, _no_bloom)
     no_rows = dict(entry, cnull={"v": 10}, rows=None)
-    assert not LakeTable._bound_excludes(no_rows, "v", "is_not_null", None)
+    assert not pruning.bound_excludes(no_rows, "v", "long", "is_not_null", None, _no_bloom)

@@ -245,9 +245,10 @@ def test_create_insert_describe_tvf(spark, tmp_path):
     t = cat.tables["sqlmade"]
     assert t.snapshot()["n_buckets"] == 8
 
-    cat.sql(
+    ins = cat.sql(
         "INSERT INTO sqlmade VALUES (1, 'a', 1.0), (2, 'b', 2.0), (3, 'c', 3.0)"
-    )
+    ).collect()[0]
+    assert ins["operation"] == "insert" and ins["rows"] == 3
     assert _rows(t.read()) == [(1, "a", 1.0), (2, "b", 2.0), (3, "c", 3.0)]
     # INSERT of an existing key is an upsert on these PK'd CDC tables
     cat.sql("INSERT INTO sqlmade VALUES (3, 'c2', 30.0), (4, 'd', 4.0)")

@@ -68,6 +68,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..session import local_frame
+from . import pruning
 
 META_COLS = {"op", "lsn", "event_ts", "_bucket"}
 LSN_COL = "_lsn"
@@ -121,10 +122,8 @@ class MergeStats:
     batch_id: int
     applied: bool
     version: int
-    input_rows: int = 0
     deduped_rows: int = 0  # events consumed from the batch (pre-dedup count)
     touched_buckets: int = 0
-    output_rows: int = 0
     skew_prereduced: bool = False  # hot-key guard pre-reduce fired
     lineage: list[dict] = field(default_factory=list)
     stage_id: str | None = None  # set when the commit was staged (WAP), not applied
@@ -1097,14 +1096,14 @@ class LakeTable:
                 "type": tn,
                 "ndv": ndv,
                 "nulls": nul,
-                "min": self._json_bound(row[f"_min_{c}"]),
-                "max": self._json_bound(row[f"_max_{c}"]),
+                "min": pruning.encode(row[f"_min_{c}"]),
+                "max": pruning.encode(row[f"_max_{c}"]),
             }
             nonnull = n - nul
             if (
                 tn in self._EQ_INDEXABLE
                 and 1 < ndv
-                and ndv * self._BLOOM_BITS_PER_EL <= self._BLOOM_MAX_BITS
+                and ndv * pruning.BLOOM_BITS_PER_EL <= pruning.BLOOM_MAX_BITS
                 and nonnull > n // 2
             ):
                 rec_eq.append(c)
@@ -1648,7 +1647,7 @@ class LakeTable:
                 # py4j sends a naive datetime as an instant read in the
                 # driver's local zone; the zone-free text casts to the
                 # same wall clock ``toInternal`` (and the bucket) uses
-                return F.lit(v.replace(tzinfo=None).isoformat(sep=" ")).cast(t)
+                return F.lit(str(v.replace(tzinfo=None))).cast(t)
             return F.lit(v).cast(t)
 
         cond = None
@@ -2027,7 +2026,6 @@ class LakeTable:
         "hours": ("timestamp",),
         "truncate": ("string", "bigint", "int", "smallint", "tinyint"),
     }
-    _SPEC_INT_TYPES = ("bigint", "int", "smallint", "tinyint")
 
     @staticmethod
     def _parse_spec_field(item) -> tuple:
@@ -2121,91 +2119,7 @@ class LakeTable:
                 "partition spec — alter_partition_spec([...]) it away first"
             )
 
-    @staticmethod
-    def _pt_expr(fld: dict, src: str) -> F.Column:
-        """The transform as a pure-codegen Column over current column
-        name ``src`` (session TZ is UTC — epoch math is exact)."""
-        t, p = fld["transform"], fld.get("param")
-        c = F.col(src)
-        if t == "identity":
-            return c
-        if t == "days":
-            if fld["src"] == "date":
-                return F.datediff(c, F.lit("1970-01-01"))
-            return F.floor(c.cast("double") / 86400).cast("int")
-        if t == "hours":
-            return F.floor(c.cast("double") / 3600).cast("int")
-        if t == "months":
-            return (F.year(c) - 1970) * 12 + F.month(c) - 1
-        if t == "years":
-            return F.year(c) - 1970
-        if t == "truncate":
-            if fld["src"] == "string":
-                return F.substring(c, 1, p)
-            # Iceberg integer truncate: v - (((v % W) + W) % W)
-            return c - F.pmod(c, F.lit(p))
-        raise ValueError(f"unknown transform {t!r}")
-
-    @classmethod
-    def _pt_decode(cls, fld: dict, raw: "str | None"):
-        """Hive-escaped partition dirname value -> typed tuple value
-        (None = the transform source was NULL for every row)."""
-        from urllib.parse import unquote
-
-        if raw is None or raw == "__HIVE_DEFAULT_PARTITION__":
-            return None
-        v = unquote(raw)
-        t = fld["transform"]
-        if t in ("years", "months", "days", "hours"):
-            return int(v)
-        if fld["src"] in cls._SPEC_INT_TYPES:
-            return int(v)
-        return v  # string / ISO date — lexicographic == value order
-
-    @staticmethod
-    def _pt_range(fld: dict, v) -> "tuple | None":
-        """The CLOSED range of SOURCE-column values (in ``_json_bound``
-        encoding) a partition-tuple value covers — the 'degenerate
-        exact bounds' view of a transform tuple."""
-        import datetime as _dt
-
-        t, p, src = fld["transform"], fld.get("param"), fld["src"]
-        if t == "identity":
-            return v, v
-        if t == "truncate":
-            if isinstance(v, int):
-                return v, v + p - 1
-            return v, v + "\U0010ffff"  # every string with this prefix
-        iso = lambda d: d.isoformat(sep=" ", timespec="microseconds")  # noqa: E731
-        if t == "days":
-            if src == "date":
-                s = (_dt.date(1970, 1, 1) + _dt.timedelta(days=v)).isoformat()
-                return s, s
-            lo = _dt.datetime(1970, 1, 1) + _dt.timedelta(days=v)
-            return iso(lo), iso(lo + _dt.timedelta(days=1, microseconds=-1))
-        if t == "hours":
-            lo = _dt.datetime(1970, 1, 1) + _dt.timedelta(hours=v)
-            return iso(lo), iso(lo + _dt.timedelta(hours=1, microseconds=-1))
-        if t in ("months", "years"):
-            if t == "months":
-                y, m = 1970 + v // 12, v % 12 + 1
-                y2, m2 = (y, m + 1) if m < 12 else (y + 1, 1)
-            else:
-                y, m, y2, m2 = 1970 + v, 1, 1971 + v, 1
-            if src == "date":
-                return (
-                    _dt.date(y, m, 1).isoformat(),
-                    (_dt.date(y2, m2, 1) - _dt.timedelta(days=1)).isoformat(),
-                )
-            return (
-                iso(_dt.datetime(y, m, 1)),
-                iso(_dt.datetime(y2, m2, 1) - _dt.timedelta(microseconds=1)),
-            )
-        return None
-
     # ----- predicate-driven file skipping (Iceberg lower/upper_bounds) -----
-
-    _PRUNE_OPS = ("=", "==", "<", "<=", ">", ">=", "is_null", "is_not_null")
 
     # snapshot fields the engine owns — user props (merge(props=...))
     # may not shadow them
@@ -2220,83 +2134,12 @@ class LakeTable:
             "partition_specs", "default_spec",
         }
     )
-    _NULL_OPS = ("is_null", "is_not_null")
 
-    # equality-skipping index parameters (Iceberg Puffin bloom-blob
-    # analogue). Blooms are NDV-SIZED at ~10 bits/element (k=7 probes
-    # => fpp ~0.8%) — a fixed-size bloom saturates exactly at the file
-    # sizes where skipping matters most. Small blooms (<= _BLOOM_INLINE
-    # bits) inline into the manifest entry; larger ones are written as
+    # equality-index blooms (plans/pruning.py) up to this many bits
+    # inline into the manifest entry; larger ones are written as
     # content-addressed SIDECAR files under _meta/index/ (the Puffin
-    # file analogue) referenced by path, capped at _BLOOM_MAX_BITS
-    # (1 MiB => files up to ~838k distinct values; beyond that nothing
-    # is stored — unknown never mis-prunes, it just doesn't prune).
-    _BLOOM_K = 7
-    _BLOOM_BITS_PER_EL = 10
+    # file analogue) referenced by path
     _BLOOM_INLINE = 8192  # bits; <= 1 KiB base64s into the manifest
-    _BLOOM_MAX_BITS = 1 << 23
-    _CSET_MAX = 64  # exact distinct-set cap (categorical columns)
-
-    @staticmethod
-    def _eq_hash(v) -> tuple[int, int]:
-        """Two independent 64-bit hashes of an equality-indexable
-        value (string or integer), identical at build and probe time.
-        Floats/timestamps are not indexable (equality on them is
-        ill-posed across engines)."""
-        import hashlib
-
-        if isinstance(v, bool) or not isinstance(v, (str, int)):
-            raise TypeError(f"not equality-indexable: {type(v).__name__}")
-        raw = v.encode("utf-8") if isinstance(v, str) else b"i:%d" % v
-        d = hashlib.md5(raw).digest()
-        return int.from_bytes(d[:8], "big"), int.from_bytes(d[8:], "big")
-
-    @classmethod
-    def _bloom_bits_for(cls, ndv: int) -> int | None:
-        m = 1024
-        while m < cls._BLOOM_BITS_PER_EL * ndv:
-            m <<= 1
-            if m > cls._BLOOM_MAX_BITS:
-                return None
-        return m
-
-    @classmethod
-    def _bloom_build(cls, values) -> bytes | None:
-        """Bitset over the distinct values (numpy-vectorized probe
-        scatter), or None when the column is not indexable or too
-        distinct for the size cap."""
-        import numpy as np
-
-        m = cls._bloom_bits_for(len(values))
-        if m is None:
-            return None
-        try:
-            pairs = [cls._eq_hash(v) for v in values]
-        except TypeError:
-            return None
-        h1 = np.array([p[0] for p in pairs], dtype=np.uint64)
-        h2 = np.array([p[1] for p in pairs], dtype=np.uint64)
-        mask = np.uint64(m - 1)  # m is a power of two
-        bits = np.zeros(m // 8, dtype=np.uint8)
-        for j in range(cls._BLOOM_K):
-            pos = (h1 + np.uint64(j) * h2) & mask
-            np.bitwise_or.at(bits, (pos >> np.uint64(3)).astype(np.int64),
-                             np.left_shift(np.uint8(1), (pos & np.uint64(7)).astype(np.uint8)))
-        return bits.tobytes()
-
-    @classmethod
-    def _bloom_probe(cls, raw: bytes, val) -> bool:
-        """False => the value is PROVABLY absent from the file."""
-        try:
-            h1, h2 = cls._eq_hash(val)
-        except TypeError:
-            return True  # unindexable probe value: cannot prune
-        m = len(raw) * 8
-        for j in range(cls._BLOOM_K):
-            p = (h1 + j * h2) % m
-            if not (raw[p >> 3] >> (p & 7)) & 1:
-                return False
-        return True
 
     def _bloom_maybe(self, ref: str, val) -> bool:
         """Resolve an inline (``b64:...``) or sidecar (``idx:<rel>``)
@@ -2306,7 +2149,7 @@ class LakeTable:
         import base64
 
         if ref.startswith("b64:"):
-            return self._bloom_probe(base64.b64decode(ref[4:]), val)
+            return pruning.bloom_probe(base64.b64decode(ref[4:]), val)
         rel = ref[4:]  # "idx:<relpath>"
         raw = self._bloom_cache.get(rel)
         if raw is None:
@@ -2318,7 +2161,7 @@ class LakeTable:
             if len(self._bloom_cache) >= 64:
                 self._bloom_cache.pop(next(iter(self._bloom_cache)))
             self._bloom_cache[rel] = raw
-        return self._bloom_probe(raw, val)
+        return pruning.bloom_probe(raw, val)
 
     def _bloom_store(self, raw: bytes) -> str:
         """Inline small blooms; write large ones as content-addressed
@@ -2345,100 +2188,14 @@ class LakeTable:
                 os.remove(tmp)
         return "idx:" + rel
 
-    @classmethod
-    def _bound_excludes(
-        cls, entry: dict, col: str, op: str, val, bloom_resolver=None
-    ) -> bool:
-        """True iff the file's manifest bounds PROVE no row satisfies
-        ``col <op> val`` (NULL rows never satisfy a comparison, and
-        bounds cover exactly the non-NULL rows). Missing bounds —
-        pre-stats manifests, untracked types, all-NULL columns — never
-        exclude. ``bloom_resolver`` (an instance's ``_bloom_maybe``)
-        additionally resolves sidecar bloom refs; without it only
-        inline blooms participate."""
-        if op in cls._NULL_OPS:
-            # null-count stats (Iceberg null_value_counts): IS NULL
-            # skips files with zero nulls in the column, IS NOT NULL
-            # skips files where the column is entirely NULL (the case
-            # min/max bounds cannot see — an all-NULL column has no
-            # bounds at all). Unknown counts never prune.
-            nc = (entry.get("cnull") or {}).get(col)
-            if nc is None:
-                return False
-            if op == "is_null":
-                return nc == 0
-            rows = entry.get("rows")
-            return rows is not None and nc == rows
-        if op in ("=", "=="):
-            # equality index first: exact distinct set (categorical
-            # columns), then the per-file bloom — both PROVE absence,
-            # independent of any clustering, where min/max bounds on a
-            # hashed layout span the domain and prove nothing
-            s = (entry.get("cset") or {}).get(col)
-            if s is not None:
-                try:
-                    if cls._json_bound(val) not in s:
-                        return True
-                except TypeError:
-                    pass
-            bb = (entry.get("cbloom") or {}).get(col)
-            if bb is not None:
-                if bloom_resolver is not None:
-                    if not bloom_resolver(bb, val):
-                        return True
-                elif bb.startswith("b64:"):
-                    # classmethod context (no table handle): inline
-                    # blooms only; sidecar refs stay unknown => keep
-                    import base64
-
-                    if not cls._bloom_probe(base64.b64decode(bb[4:]), val):
-                        return True
-        lo = (entry.get("cmin") or {}).get(col)
-        hi = (entry.get("cmax") or {}).get(col)
-        if lo is None or hi is None:
-            return False
-        return cls._range_excludes(lo, hi, op, val)
-
-    @staticmethod
-    def _range_excludes(lo, hi, op, val) -> bool:
-        """True iff a CLOSED [lo, hi] value range PROVES no element
-        satisfies ``<op> val`` — shared by manifest bounds and
-        partition-tuple pruning."""
-        try:
-            if op in ("=", "=="):
-                return val < lo or val > hi
-            if op == "<":
-                return lo >= val
-            if op == "<=":
-                return lo > val
-            if op == ">":
-                return hi <= val
-            if op == ">=":
-                return hi < val
-        except TypeError:
-            return False  # incomparable predicate/bound types: keep
-        return False
-
     def prune_files(self, snap: dict, predicates: list[tuple]) -> list[dict]:
         """Manifest entries that can contain rows matching the AND of
-        ``predicates`` (each ``(col, op, value)``, op in _PRUNE_OPS).
-        O(metadata) — no file is opened. MOR safety: a bucket holding
-        ANY delta file is exempt (kept whole): last-writer-wins
-        resolution needs every version of a key, and skipping the
-        delta carrying a key's latest (non-matching) row would let a
-        stale matching row win. Base-only buckets prune per file —
-        each live key's single current row either matches (its file is
-        kept) or is filtered out anyway.
-
-        Rename-safe: bounds live in manifests under the PHYSICAL name
-        the file was written with, so each predicate column resolves
-        through its field id to the file's epoch name before the
-        lookup (after ``rename a->c; rename b->a``, a predicate on
-        current ``a`` must check old files' ``b`` bounds — a raw
-        name lookup would read original ``a``'s and mis-prune). A
-        base file whose epoch PREDATES the column's existence holds
-        only NULLs for it, and NULL never satisfies a comparison, so
-        it prunes outright.
+        ``predicates`` (each ``(col, op, value)``, op in
+        ``pruning.PRUNE_OPS``). O(metadata) — no file is opened. A
+        bucket holding any MOR delta is kept whole, and predicate
+        columns resolve by field id to each file's physical names
+        (plans/pruning.py ``prune``). Values compare in the column's
+        type; a pair that does not compare keeps the file.
 
         ``predicates`` may also be a SQL predicate STRING over the
         supported subset (AND/OR/parens, comparisons, IS [NOT] NULL,
@@ -2447,121 +2204,7 @@ class LakeTable:
         branch proves exclusion, OR only when every branch does, so
         ``lang = 'py' OR lang IS NULL`` keeps exactly the files either
         side admits. Unknown always keeps."""
-        from .predicate import (
-            And,
-            Or,
-            ParseError,
-            Pred,
-            evaluate_excludes,
-            parse_predicate,
-        )
-
-        if isinstance(predicates, str):
-            try:
-                tree = parse_predicate(predicates)
-            except ParseError:
-                # the documented contract (plans/predicate.py): a
-                # predicate outside the prunable subset (functions,
-                # arithmetic, NOT, ...) falls back to a plain filtered
-                # scan — tree=None keeps every file; the row-level
-                # F.expr filter downstream still applies it exactly
-                # (truly malformed SQL surfaces there as an analysis
-                # error instead of a misleading prune failure)
-                tree = None
-        elif isinstance(predicates, (And, Or, Pred)):
-            tree = predicates  # pre-built AST (read_semi's IN trees)
-        else:
-            leaves = []
-            for col, op, val in predicates:
-                if op not in self._PRUNE_OPS:
-                    raise ValueError(f"unsupported prune op {op!r}")
-                if op in self._NULL_OPS:
-                    leaves.append(Pred(col, op))
-                elif val is not None:
-                    leaves.append(Pred(col, "=" if op == "==" else op, val))
-            tree = And(leaves) if leaves else None
-        fids = snap.get("field_ids") or {}
-        log = snap.get("name_log") or {}
-
-        def _phys(col: str, epoch: int) -> str | None:
-            """Column's physical name at ``epoch``; None => the column
-            (by id) did not exist in files of that epoch."""
-            fid = fids.get(col)
-            if fid is None:
-                return col  # meta column / pre-field-id snapshot
-            emap = log.get(str(epoch))
-            if emap is None:
-                return col  # unknown epoch: trust the current name
-            return emap.get(str(fid))
-
-        specs = snap.get("partition_specs") or {}
-
-        def _pt_excludes(f: dict, p: "Pred") -> bool:
-            """Partition-tuple pruning, evaluated BEFORE bounds: the
-            file's declared tuple (under the spec it was WRITTEN with)
-            is an exact single-partition guarantee, so exclusion here
-            never depends on clustering. Files from pre-spec commits
-            have no tuple and fall through to bounds."""
-            pt = f.get("pt")
-            if not specs or pt is None:
-                return False
-            fields = specs.get(str(f.get("spec", 0))) or []
-            fid = fids.get(p.col)
-            if fid is None:
-                return False
-            for i, fld in enumerate(fields):
-                if i >= len(pt) or fld["fid"] != fid:
-                    continue
-                v = pt[i]
-                if v is None:
-                    # the whole file's source column is NULL
-                    return p.op != "is_null"
-                if p.op == "is_null":
-                    return True  # transforms are null-preserving
-                if p.op == "is_not_null":
-                    return False
-                val = self._json_bound(p.val)
-                if val is None:
-                    return False
-                rng = self._pt_range(fld, v)
-                if rng is not None and self._range_excludes(
-                    rng[0], rng[1], p.op, val
-                ):
-                    return True
-            return False
-
-        def _leaf_excludes(f: dict, p: "Pred") -> bool:
-            if _pt_excludes(f, p):
-                return True
-            pcol = _phys(p.col, int(f.get("epoch", 0)))
-            if pcol is None:
-                # column born after this file: every row is NULL, so
-                # IS NULL matches (keep) and everything else excludes
-                return p.op != "is_null"
-            val = None if p.op in self._NULL_OPS else self._json_bound(p.val)
-            if val is None and p.op not in self._NULL_OPS:
-                return False  # unencodable literal: unknown keeps
-            return self._bound_excludes(
-                f, pcol, p.op, val, bloom_resolver=self._bloom_maybe
-            )
-
-        delta_buckets = {
-            f["bucket"] for f in snap["files"] if f.get("kind", "base") == "delta"
-        }
-        # DV entries are masks, not data: they never satisfy a predicate
-        # themselves and _scan re-attaches them by bucket at read time,
-        # so pruning excludes them (a dv entry admitted here would
-        # otherwise mark its bucket 'touched' in DML for no reason)
-        return [
-            f
-            for f in snap["files"]
-            if f.get("kind", "base") != "dv"
-            and (
-                f["bucket"] in delta_buckets
-                or tree is None
-                or not evaluate_excludes(tree, lambda p, _f=f: _leaf_excludes(_f, p))
-            )
-        ]
+        return pruning.prune(snap, predicates, self._bloom_maybe)
 
     def read_where(
         self, predicates: "list[tuple] | str", version: int | None = None
@@ -2622,64 +2265,7 @@ class LakeTable:
         how many survivors are only kept because their bucket holds
         MOR deltas (the resolution exemption — compaction is the fix
         if that number dominates)."""
-        snap = self.snapshot(version)
-        kept = self.prune_files(snap, predicates)
-        kept_paths = {f["path"] for f in kept}
-        # data entries only: DV masks are neither kept nor skipped by a
-        # predicate — they ride the surviving buckets (reported below)
-        data = [f for f in snap["files"] if f.get("kind", "base") != "dv"]
-        delta_buckets = {
-            f["bucket"] for f in data if f.get("kind", "base") == "delta"
-        }
-        base_only = [f for f in data if f["bucket"] not in delta_buckets]
-        kept_if_no_deltas = (
-            self.prune_files(dict(snap, files=base_only), predicates)
-            if delta_buckets
-            else kept
-        )
-        total_bytes = sum(f.get("bytes") or 0 for f in data)
-        kept_bytes = sum(f.get("bytes") or 0 for f in kept)
-        kept_buckets = {f["bucket"] for f in kept}
-        return {
-            "version": snap["version"],
-            "files_total": len(data),
-            "files_kept": len(kept),
-            "files_skipped": len(data) - len(kept),
-            "dv_mask_files": sum(
-                1
-                for f in snap["files"]
-                if f.get("kind", "base") == "dv" and f["bucket"] in kept_buckets
-            ),
-            "bytes_total": total_bytes,
-            "bytes_kept": kept_bytes,
-            "bytes_skipped": total_bytes - kept_bytes,
-            "kept_for_delta_resolution": sum(
-                1 for f in kept if f["bucket"] in delta_buckets
-            ),
-            "base_files_admitted_by_stats": len(kept_if_no_deltas),
-            # attribution: files ONLY the declared partition tuple could
-            # exclude (min/max bounds alone would have admitted them) —
-            # the operator's measure of what the partition spec buys
-            # over clustering on this predicate
-            "skipped_by_partition_only": (
-                len(
-                    self.prune_files(
-                        dict(
-                            snap,
-                            files=[
-                                {k: v for k, v in f.items() if k != "pt"}
-                                for f in data
-                            ],
-                        ),
-                        predicates,
-                    )
-                )
-                - len(kept)
-                if any(f.get("pt") is not None for f in data)
-                else 0
-            ),
-            "paths_kept_sample": sorted(kept_paths)[:10],
-        }
+        return pruning.explain(self.snapshot(version), predicates, self._bloom_maybe)
 
     @staticmethod
     def _files_by_bucket(snap: dict) -> dict[int, tuple[str, ...]]:
@@ -3675,7 +3261,7 @@ class LakeTable:
             srcs = [cur_names.get(fld["fid"]) for fld in spec_fields]
             if all(s is not None and s in df.columns for s in srcs):
                 for i, (fld, s) in enumerate(zip(spec_fields, srcs)):
-                    df = df.withColumn(f"_pt{i}", self._pt_expr(fld, s))
+                    df = df.withColumn(f"_pt{i}", pruning.partition_expr(fld, s))
                 ptcols = [f"_pt{i}" for i in range(len(spec_fields))]
         if cluster_by and zorder and len(cluster_by) > 1:
             # Z-ORDER clustering (Iceberg rewrite_data_files zorder /
@@ -3732,7 +3318,7 @@ class LakeTable:
                     if ptcols:
                         entry["spec"] = spec_id
                         entry["pt"] = [
-                            self._pt_decode(fld, comps.get(f"_pt{i}"))
+                            pruning.partition_value(fld, comps.get(f"_pt{i}"))
                             for i, fld in enumerate(spec_fields)
                         ]
                     files.append(entry)
@@ -3750,42 +3336,6 @@ class LakeTable:
             f.update(self._file_stats(os.path.join(self.root, f["path"]), eq_cols))
         return files
 
-    # longest string bound persisted to the manifest: parquet writers
-    # may truncate binary stats (Spark pads a truncated max so it stays
-    # a valid upper bound, but belt-and-braces we only trust values
-    # comfortably below any truncation threshold)
-    _MAX_STR_BOUND = 48
-
-    @classmethod
-    def _json_bound(cls, v):
-        """Normalize a parquet statistics value (or a predicate value)
-        into a JSON-storable, order-preserving form. Returns None for
-        types we don't track. ISO strings keep date/timestamp ordering;
-        hex keeps bytes ordering."""
-        import datetime
-
-        if isinstance(v, bool) or v is None:
-            return None  # boolean bounds prune nothing useful
-        if isinstance(v, (int, float)):
-            return v
-        if isinstance(v, str):
-            return v if len(v) <= cls._MAX_STR_BOUND else None
-        if isinstance(v, datetime.datetime):
-            # ONE encoding for every comparison surface: parquet stats
-            # (pyarrow returns tz-aware UTC for micros columns), pushed
-            # DataSource literals (tz-aware session values) and
-            # partition-tuple ranges (naive UTC) — a '+00:00' suffix
-            # on one side would make exact-boundary exclusions fail
-            # conservatively. Session TZ is pinned UTC.
-            if v.tzinfo is not None:
-                v = v.astimezone(datetime.timezone.utc).replace(tzinfo=None)
-            return v.isoformat(sep=" ", timespec="microseconds")
-        if isinstance(v, datetime.date):
-            return v.isoformat()
-        if isinstance(v, bytes):
-            return v.hex() if len(v) <= cls._MAX_STR_BOUND else None
-        return None
-
     def _file_stats(self, path: str, eq_cols: tuple = ()) -> dict:
         """Per-file manifest stats — the analogue of an Iceberg
         manifest entry's ``record_count`` / ``file_size_in_bytes`` /
@@ -3798,9 +3348,12 @@ class LakeTable:
         min/max — the inputs to predicate-driven file skipping
         (prune_files/read_where), the top 100 TB lever beyond bucket
         pruning: an analytical filter over a clustered table opens only
-        the files whose bounds intersect it. Advisory by contract: a
-        commit never fails over stats, and every consumer treats
-        missing keys as unknown (pre-upgrade manifests carry none)."""
+        the files whose bounds intersect it. Values are stored in
+        ``pruning.encode``'s JSON form; pruning decodes them by the
+        column's type, so they compare as typed values, never as text.
+        Advisory by contract: a commit never fails over stats, and
+        every consumer treats missing keys as unknown (pre-upgrade
+        manifests carry none)."""
         import pyarrow.parquet as pq
 
         out: dict = {"rows": None, "bytes": None, "lsn_min": None, "lsn_max": None}
@@ -3842,8 +3395,8 @@ class LakeTable:
                     cnull[name] = int(sum(nulls))
                 if not (complete and mins):
                     continue
-                lo = self._json_bound(min(mins))
-                hi = self._json_bound(max(maxs))
+                lo = pruning.encode(min(mins))
+                hi = pruning.encode(max(maxs))
                 if lo is None or hi is None:
                     continue
                 if name == LSN_COL:
@@ -3860,41 +3413,31 @@ class LakeTable:
             if eq_cols:
                 # equality index (opt-in via alter_skip_columns): one
                 # COLUMN readback per file this commit wrote — the only
-                # stats item that touches data pages. ndv <= _CSET_MAX
-                # stores the exact distinct set (zero false positives,
-                # the categorical-column case); above that an
-                # ndv-sized bloom at ~10 bits/element — inline in the
+                # stats item that touches data pages. A small distinct
+                # set is stored exactly (zero false positives, the
+                # categorical-column case); above that an ndv-sized
+                # bloom (plans/pruning.py eq_index) — inline in the
                 # manifest up to 1 KiB, a content-addressed sidecar
                 # under _meta/index/ beyond (the Puffin-file analogue),
                 # nothing past the 1 MiB cap (~838k distinct values;
                 # unknown never mis-prunes).
-                import pyarrow.parquet as pq2
-
                 present = {md.schema.column(i).name for i in range(md.num_columns)}
                 want = [c for c in eq_cols if c in present]
                 if want:
-                    tbl = pq2.read_table(path, columns=want)
-                    cset: dict = {}
-                    cbloom: dict = {}
+                    tbl = pq.read_table(path, columns=want)
+                    index: dict = {"cset": {}, "cbloom": {}}
                     for c in want:
                         vals = [
                             v for v in tbl.column(c).unique().to_pylist()
                             if v is not None
                         ]
-                        if not vals:
-                            continue
-                        if len(vals) <= self._CSET_MAX:
-                            js = [self._json_bound(v) for v in vals]
-                            if all(v is not None for v in js):
-                                cset[c] = sorted(js, key=lambda x: (str(type(x)), str(x)))
-                                continue
-                        b = self._bloom_build(vals)
-                        if b is not None:
-                            cbloom[c] = self._bloom_store(b)
-                    if cset:
-                        out["cset"] = cset
-                    if cbloom:
-                        out["cbloom"] = cbloom
+                        got = pruning.eq_index(vals) if vals else None
+                        if got is not None:
+                            kind, idx = got
+                            index[kind][c] = (
+                                self._bloom_store(idx) if kind == "cbloom" else idx
+                            )
+                    out.update({k: v for k, v in index.items() if v})
         except Exception:
             pass  # advisory only
         return out

@@ -3,7 +3,7 @@
 ``read_where`` historically took a conjunction of ``(col, op, val)``
 triples; real scan predicates are expression TREES (Iceberg binds an
 expression, Delta/Spark push a Catalyst tree). This module parses the
-supported SQL subset into an And/Or/leaf AST that laketable evaluates
+supported SQL subset into an And/Or/leaf AST that plans/pruning.py evaluates
 compositionally against per-file manifest stats:
 
     AND  — a file is excluded if ANY child proves exclusion
@@ -30,13 +30,11 @@ Grammar (case-insensitive keywords):
                | ident BETWEEN literal AND literal
     op       := '=' | '==' | '<' | '<=' | '>' | '>='
     literal  := number | 'single-quoted string' | TRUE | FALSE
-               | TIMESTAMP 'iso' | DATE 'iso'   (space or 'T' separator;
-                 any other body prunes nothing, see Unparsed)
+               | TIMESTAMP '...' | DATE '...'   (kept as TypedLiteral)
 """
 
 from __future__ import annotations
 
-import datetime as _dt
 import re
 from dataclasses import dataclass
 
@@ -53,13 +51,12 @@ class Pred:
 
 
 @dataclass(frozen=True)
-class Unparsed:
-    """A ``TIMESTAMP``/``DATE`` literal body ``fromisoformat`` cannot
-    read (Spark also accepts, e.g., ``'2024-3-1'`` or a ``' UTC'``
-    suffix). Pruning has no encoding for it, so its leaf keeps every
-    file; the row filter still applies the literal as Spark reads it."""
+class TypedLiteral:
+    """An ANSI ``TIMESTAMP '...'``/``DATE '...'`` literal, kept as
+    written: pruning (plans/pruning.py) reads the body into its typed
+    value, and the row filter applies the literal as Spark reads it."""
 
-    kind: str
+    kind: str  # TIMESTAMP | DATE
     text: str
 
 
@@ -171,20 +168,13 @@ class _Parser:
         if k == "kw" and v in ("TRUE", "FALSE"):
             return v == "TRUE"
         if k == "ident" and isinstance(v, str) and v.upper() in ("TIMESTAMP", "DATE"):
-            # ANSI typed literals: TIMESTAMP '...' / DATE '...' parse
-            # to datetime/date, which pruning encodes like the
-            # manifest bounds (LakeTable._json_bound). The raw body
-            # would compare as text: a 'T' separator sorts after every
-            # same-day bound, a second-precision body before the
-            # microsecond-padded bound equal to it.
+            # ANSI typed literals stay typed: pruning compares them as
+            # datetime/date values in the column's own type, never as
+            # text
             k2, v2 = self._next()
             if k2 != "lit" or not isinstance(v2, str):
                 raise ParseError(f"expected string after {v}")
-            parse = _dt.date if v.upper() == "DATE" else _dt.datetime
-            try:
-                return parse.fromisoformat(v2.strip())
-            except ValueError:
-                return Unparsed(v.upper(), v2)
+            return TypedLiteral(v.upper(), v2)
         raise ParseError(f"expected literal, got {v!r}")
 
     def _predicate(self):
@@ -234,7 +224,7 @@ def parse_predicate(s: str):
 def evaluate_excludes(node, leaf_excludes) -> bool:
     """True iff the tree PROVES a file holds no matching row.
     ``leaf_excludes(Pred) -> bool`` is the per-file stats check
-    (laketable's bounds/null-count/equality-index evaluator). AND
+    (pruning's bounds/null-count/equality-index evaluator). AND
     excludes when any child does; OR only when all children do —
     unknown leaves return False and propagate as "keep"."""
     if isinstance(node, Pred):

@@ -509,7 +509,7 @@ class LakeCatalog:
             {
                 "operation": "insert",
                 "version": stats.version,
-                "rows": stats.output_rows,
+                "rows": stats.deduped_rows,
             }
         )
 

@@ -519,14 +519,10 @@ class LakeTableBatchReader(DataSourceReader):
         from ..plans.predicate import And, Or, Pred
 
         snap = self._t.snapshot(self._version)
-        prunable = [
-            p for p in self._preds
-            if p[1] in LakeTable._PRUNE_OPS or p[1] in ("is_null", "is_not_null")
-        ]
         in_lists = getattr(self, "_in_lists", [])
-        if prunable or in_lists:
+        if self._preds or in_lists:
             tree = And(
-                [Pred(c, "=" if o == "==" else o, v) for c, o, v in prunable]
+                [Pred(c, o, v) for c, o, v in self._preds]
                 + [Or([Pred(c, "=", v) for v in vals]) for c, vals in in_lists]
             )
             admitted = self._t.prune_files(snap, tree)
@@ -537,7 +533,7 @@ class LakeTableBatchReader(DataSourceReader):
         _trace(
             f"batch partitions v{self._version}: admitted "
             f"{len(admitted)}/{len([x for x in snap['files'] if x.get('kind', 'base') != 'dv'])}"
-            f" files, preds={prunable}"
+            f" files, preds={self._preds}"
         )
         admitted_paths = {f["path"] for f in admitted}
         buckets = sorted({f["bucket"] for f in admitted})
