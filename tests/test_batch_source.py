@@ -99,6 +99,32 @@ def test_unpushable_filter_still_exact(reg, spark, tmp_path):
     assert got == want and got
 
 
+def test_timestamp_ntz_column_reads(reg, spark, tmp_path):
+    """A timestamp_ntz column reads through the DataSource as its
+    wall-clock value, as ``read()`` does, across a MOR delta and a DV
+    delete, and a pushed filter on it stays exact."""
+    import datetime as dt
+
+    from w3_data_etl_pipeline_spark.session import local_frame
+
+    ddl = "user_id BIGINT, ntz TIMESTAMP_NTZ, ts TIMESTAMP, lsn BIGINT, op STRING"
+    day = dt.datetime(2024, 3, 1)
+    rows = lambda ks, lsn: [  # noqa: E731
+        (k, None if k % 7 == 0 else day + dt.timedelta(hours=k, microseconds=k),
+         day + dt.timedelta(minutes=k), lsn, "U")
+        for k in ks
+    ]
+    root = str(tmp_path / "t")
+    t = LakeTable.create(spark, root, T.StructType.fromDDL(ddl.rsplit(", lsn", 1)[0]),
+                         ["user_id"], n_buckets=4)
+    t.merge(local_frame(spark, rows(range(60), 1), ddl), 0)
+    t.merge(local_frame(spark, rows(range(50, 80), 2), ddl), 1, mode="mor")
+    t.delete_where("user_id < 5", mode="dv")
+    assert _rows(_read(spark, root)) == _rows(t.read())
+    cut = "ntz >= TIMESTAMP_NTZ '2024-03-02 12:00:00'"
+    assert _rows(_read(spark, root).where(cut)) == _rows(t.read().where(cut))
+
+
 def test_time_travel_options(reg, spark, tmp_path):
     import time as _time
 

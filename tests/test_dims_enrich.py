@@ -1,10 +1,11 @@
-"""Dimension builders (A1-A4) and vectorized enrichment UDFs."""
+"""Dimension builders (A1-A4) and lang enrichment: the Catalyst
+expressions against their pandas twin."""
 
 from __future__ import annotations
 
 from pyspark.sql import Row
 
-from w3_data_etl_pipeline_spark.functions.enrich import enrich_changes
+from w3_data_etl_pipeline_spark.functions.enrich import _SPACE, detect_lang, enrich_changes
 from w3_data_etl_pipeline_spark.operators.dims import (
     distinct_dim,
     enrich_missing_only,
@@ -58,6 +59,43 @@ def test_enrich_changes_lang_fill(spark):
     assert out["src/b.rs"] == "Rust"         # canonicalized claim
     assert out["src/c.unknownext"] is None   # nothing known
     assert out["src/d.md"] == "Markdown"     # case-normalized
+
+
+def test_enrich_changes_matches_detect_lang_twin(spark):
+    """The built-in expressions equal the pandas twin value for value,
+    NULL for NULL, where Java's regex, trim and case rules differ from
+    Python's: every ``str.isspace()`` character around a claimed lang,
+    ``$`` before a final '\\n' but not '\\r', dotted names and
+    directories, and case folds that reach ASCII (KELVIN SIGN -> 'k')
+    or leave it (U+0130 -> 'i' + U+0307)."""
+    from w3_data_etl_pipeline_spark.session import local_frame
+
+    assert _SPACE == "".join(c for c in map(chr, range(0x110000)) if c.isspace())
+    paths = [
+        "src/a.py", "a.py\n", "a.py\r", "a.py\n\n", "a.py\r\n", "a.py\u2028",
+        "a.py\u0085", "x.tar.gz", "v1.2/lib.rs", "v1.2/README", "dir.md/",
+        "SRC/MAIN.JAVA", "b.Tsx", "c.unknownext", "a.", ".sh", "a.py ", "a..c",
+        "n\u212Aame.C", "x.t\u0130", "", None,
+    ]
+    langs = [
+        None, "", " ", "rust", "RUST", "Python", "c++", "golang", "mar\u212Adown",
+        "javascr\u0130pt", "\u0130", "k", "py thon", "unknown",
+    ] + [f"{c}go{c}" for c in _SPACE] + [f"{c} Bash\t" for c in _SPACE[::4]]
+    rows = [(p, lang) for p in paths for lang in langs[:3]] + [
+        ("p.md", lang) for lang in langs
+    ] + [(None, lang) for lang in langs]
+    df = local_frame(spark, [(i, p, lang) for i, (p, lang) in enumerate(rows)],
+                     "i long, path string, lang string")
+    got = {r["i"]: r["lang"] for r in enrich_changes(df).collect()}
+    twin = {
+        r["i"]: r["norm"]
+        for r in df.select("i", detect_lang("path", "lang").lang_norm.alias("norm")).collect()
+    }
+    assert got == twin
+    # the cases above reach every branch: claimed, from the path, neither
+    assert {"Go", "Shell", "Markdown", "Python", "Rust", None} <= set(got.values())
+    assert got[rows.index(("a.py\n", None))] == "Python"
+    assert got[rows.index(("a.py\r", None))] is None
 
 
 def test_distinct_dim(spark):

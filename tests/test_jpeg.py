@@ -92,3 +92,40 @@ def test_encoder_input_validation():
         encode_jpeg(np.zeros((8, 8), dtype=np.float32))
     with pytest.raises(ValueError, match="empty"):
         encode_jpeg(np.zeros((0, 8), dtype=np.uint8))
+
+
+def test_media_features_entry_takes_empty_and_wide_texts(spark, tmp_path):
+    """jpeg_media_features on an empty text (an empty image) and on
+    codepoints past 255 (clamped to 255), against its DuckDB oracle by
+    the driver's value hash."""
+    import os
+    import sys
+
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+    from tools.compare_oracle import value_hash
+    from w3_data_etl_pipeline_spark.queries import REGISTRY
+    from w3_data_etl_pipeline_spark.queries_olap import jpeg_media_features
+
+    texts = ["", "aé€😀 ΩzĀÿþ", "plain ascii text, long enough to cut at 32"]
+    pq.write_table(
+        pa.table({"doc_id": pa.array(range(len(texts)), pa.int64()), "text": texts}),
+        str(tmp_path / "documents.parquet"),
+    )
+    df = jpeg_media_features(spark, str(tmp_path))
+    rows = [tuple(r) for r in df.collect()]
+    con = duckdb.connect()
+    try:
+        con.execute(f"CREATE VIEW documents AS SELECT * FROM '{tmp_path}/documents.parquet'")
+        rel = con.sql(REGISTRY["jpeg_media_features"]["oracle"])
+        want, cols = rel.fetchall(), rel.columns
+    finally:
+        con.close()
+    assert sorted(df.columns) == sorted(cols)
+    assert value_hash(rows, df.columns) == value_hash(want, cols)
+    by_id = {r[df.columns.index("media_id")]: r for r in rows}
+    assert by_id[0][df.columns.index("n_px")] == 0
+    assert by_id[1][df.columns.index("n_px")] == 64 * 10

@@ -296,3 +296,113 @@ def test_point_reads_and_literal_frames_plan_no_python_rdd(spark, tmp_path):
     }
     for name, df in plans.items():
         assert "ExistingRDD" not in _plan(df), name
+
+
+
+# ---------------------------------------------------------------------------
+# CDC apply: no Python worker, no file-listing job
+# ---------------------------------------------------------------------------
+
+
+def _scala_list(seq) -> list:
+    it = seq.iterator()
+    out = []
+    while it.hasNext():
+        out.append(it.next())
+    return out
+
+
+def _executed_node_names(spark, run) -> list[str]:
+    """Run ``run()`` and return the physical operator names of every
+    SQL execution it started, from Spark's SQL status store (the
+    final adaptive plans: what actually executed)."""
+    store = spark._jsparkSession.sharedState().statusStore()
+    before = {e.executionId() for e in _scala_list(store.executionsList())}
+    run()
+    return [
+        n.name()
+        for e in _scala_list(store.executionsList())
+        if e.executionId() not in before
+        for n in _scala_list(store.planGraph(e.executionId()).allNodes())
+    ]
+
+
+def _jobs_in_group(spark, group: str, run):
+    """``run()`` under job group ``group``: its result and the
+    ``JobData`` of every job it started."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = run()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    store = sc._jsc.sc().statusStore()
+    return out, [store.job(i) for i in sorted(sc.statusTracker().getJobIdsForGroup(group))]
+
+
+def _python_eval(names: list[str]) -> list[str]:
+    return [n for n in names if "ArrowEvalPython" in n or "BatchEvalPython" in n]
+
+
+def test_enrichment_and_cdc_merges_run_no_python_eval(spark, tmp_path):
+    """Lang enrichment is a JVM-side projection: neither its own plan
+    nor any plan a COW or MOR apply executes (the enriched batch feeds
+    the merge's scan, shuffle and write) holds a Python eval node."""
+    from w3_data_etl_pipeline_spark import datagen
+    from w3_data_etl_pipeline_spark.functions.enrich import enrich_changes
+    from w3_data_etl_pipeline_spark.plans.laketable import LakeTable
+    from w3_data_etl_pipeline_spark.schemas import SOURCE_FILES
+    from w3_data_etl_pipeline_spark.streaming.cdc import apply_batch
+
+    events = datagen.change_events(spark, 400, 200, content_max=128)
+    assert "EvalPython" not in _plan(enrich_changes(events))
+    for mode in ("cow", "mor"):
+        t = LakeTable.create(
+            spark, str(tmp_path / mode), SOURCE_FILES, ["repo", "path"], n_buckets=4
+        )
+        t.overwrite(datagen.source_snapshot(spark, 150, content_max=128), lsn=0)
+        names = _executed_node_names(
+            spark, lambda: apply_batch(t, events, 0, enrich=True, mode=mode)
+        )
+        assert "WriteFiles" in names, mode  # the merge's own write ran
+        assert not _python_eval(names), (mode, _python_eval(names))
+
+
+def test_mor_scans_start_no_listing_job(spark, tmp_path):
+    """Scans name their files from the manifest, so past Spark's
+    32-path parallel-discovery threshold building a read must still
+    start no Spark job (a listing job stats every named path), and a
+    compaction must run no "Listing leaf files" job."""
+    from pyspark.sql import types as T
+
+    from w3_data_etl_pipeline_spark.plans.laketable import LakeTable
+
+    t = LakeTable.create(
+        spark, str(tmp_path / "many"),
+        T.StructType([T.StructField("k", T.LongType()),
+                      T.StructField("v", T.StringType())]),
+        ["k"], n_buckets=16,
+    )
+    for b in range(3):
+        t.merge(
+            spark.range(0, 160).selectExpr(
+                "id AS k", f"'{b}' AS v", f"id + {1000 * b} AS lsn", "'U' AS op"
+            ),
+            b,
+            mode="cow" if b == 0 else "mor",
+        )
+    assert len(t.snapshot()["files"]) > 32
+    full, jobs = _jobs_in_group(spark, "build-read", t.read)
+    assert jobs == [], [j.description().toString() for j in jobs]
+    some, jobs = _jobs_in_group(spark, "build-read-where", lambda: t.read_where("k >= 10"))
+    assert jobs == [], [j.description().toString() for j in jobs]
+    assert full.count() == 160 and some.count() == 150
+
+    _, jobs = _jobs_in_group(spark, "compact", t.compact)
+    assert jobs
+    listing = [
+        j.description().get() for j in jobs
+        if j.description().isDefined() and j.description().get().startswith("Listing leaf files")
+    ]
+    assert listing == []

@@ -42,14 +42,12 @@ DDL = (
 DAY0 = dt.datetime(2024, 3, 1)
 INTS = [-6, -5, -1, 0, 1, 4, 5, 9, 10, 11]
 STRS = ["", "a", "ab", "abc", "b", "ba", "z"]
-# per seed: partition spec, write-order column, rows, rows per file,
-# and whether the table has the timestamp_ntz column (seed 1 does not:
-# the batch DataSource, which reads it, has no timestamp_ntz type).
+# per seed: partition spec, write-order column, rows, rows per file.
 # Seed 0's files hold more than 64 distinct ``h`` values: blooms.
 LAYOUTS = {
-    0: (["months(d)"], "ts", 200, 70, True),
-    1: (["identity(s)", "days(ts)"], "i", 100, 6, False),
-    2: (["truncate(i, 5)", "hours(ts2)"], "d", 100, 4, True),
+    0: (["months(d)"], "ts", 200, 70),
+    1: (["identity(s)", "days(ts)"], "i", 100, 6),
+    2: (["truncate(i, 5)", "hours(ts2)"], "d", 100, 4),
 }
 
 
@@ -78,17 +76,14 @@ def _row(rng, k, lsn, op="U"):
 
 
 def _table(spark, root, seed):
-    spec, order, n, per_file, ntz = LAYOUTS[seed]
+    spec, order, n, per_file = LAYOUTS[seed]
     rng = random.Random(seed)
-    ddl = DDL if ntz else DDL.replace(", ntz TIMESTAMP_NTZ", "")
-    t = LakeTable.create(spark, root, T.StructType.fromDDL(ddl), ["id"], n_buckets=2)
+    t = LakeTable.create(spark, root, T.StructType.fromDDL(DDL), ["id"], n_buckets=2)
     t.alter_skip_columns(["h", "i", "s"])
     t.alter_partition_spec(spec)
     t.alter_write_order([order], target_rows=per_file)
-    ddl += ", lsn BIGINT, op STRING"
-    rows = lambda ks, lsn, op="U": [  # noqa: E731
-        r if ntz else r[:7] + r[8:] for r in (_row(rng, k, lsn, op) for k in ks)
-    ]
+    ddl = DDL + ", lsn BIGINT, op STRING"
+    rows = lambda ks, lsn, op="U": [_row(rng, k, lsn, op) for k in ks]  # noqa: E731
     t.merge(local_frame(spark, rows(range(n), 1), ddl), 0)
     # one MOR delta, confined to bucket 0 so bucket 1 still prunes per
     # file (a bucket holding a delta is kept whole)
@@ -183,7 +178,7 @@ def _by_pred(frames):
 
 
 def _preds(t, rng, n):
-    cols = [c for c in ("h", "i", "s", "d", "ts", "ts2", "ntz") if c in t.schema().fieldNames()]
+    cols = ["h", "i", "s", "d", "ts", "ts2", "ntz"]
     return [_sql(rng, cols) for _ in range(n)] + [_tuples(rng) for _ in range(n // 3)]
 
 
@@ -239,5 +234,6 @@ def test_pushed_filters_equal_filtered_read(spark, tables):
     src = spark.read.format("laketable").option("path", t.root).load()
     full = local_frame(spark, src.collect(), src.schema)
     for p in ["ts >= DATE '2024-03-02'", "d = TIMESTAMP '2024-03-02 00:00:00'",
-              "s = ''", _leaf(rng, "hsd") + " AND " + _leaf(rng, "is")]:
+              "s = ''", "ntz < TIMESTAMP_NTZ '2024-03-02 00:00:00'",
+              _leaf(rng, "hsd") + " AND " + _leaf(rng, "is")]:
         assert _rows(src.filter(p)) == _rows(full.filter(p)), p

@@ -3588,7 +3588,7 @@ class LakeTable:
         # Lineage/touched-bucket pre-pass. Deliberately NOT a
         # persist-then-collect: the agg needs only (lsn, _bucket),
         # so Catalyst prunes every other column — including the
-        # enrichment UDF, whose output is unused here — and the
+        # lang enrichment, whose output is unused here — and the
         # job moves two longs per row instead of materializing the
         # full batch into the columnar cache (measured ~2s/batch
         # of serial cache-build at 750k-row batches, the dominant

@@ -209,7 +209,9 @@ _JPEG_BUCKETS = ",\n           ".join(
     f"""
     WITH c AS (
       SELECT doc_id,
-             list_transform(string_split(substr(text, 1, 32), ''), x -> ord(x)) AS cs
+             list_transform(
+               list_filter(string_split(substr(text, 1, 32), ''), x -> x <> ''),
+               x -> least(ord(x), 255)) AS cs
       FROM documents
     )
     SELECT doc_id AS media_id, 'image' AS kind,
@@ -229,8 +231,11 @@ def jpeg_media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     is a multiple of the DC quant step 16), so the decoded pixel
     bucket counts are DETERMINISTIC and DuckDB reproduces them from
     the codepoints alone — a hash mismatch means the Huffman/DCT path
-    mis-decoded real compressed bytes. Lossy inputs stay pinned in
-    tests/test_jpeg.py; this entry isolates the exact-path contract."""
+    mis-decoded real compressed bytes. A codepoint past 255 is clamped
+    to 255 (one 8-bit gray pixel), and an empty text is an empty image:
+    no bytes encoded, ``n_px`` 0 and every bucket 0. Lossy inputs stay
+    pinned in tests/test_jpeg.py; this entry isolates the exact-path
+    contract."""
     import numpy as np
     import pandas as pd
 
@@ -247,10 +252,14 @@ def jpeg_media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
             }
             for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
                 s = str(text)[:32]
-                vals = np.array([(ord(ch) // 2) * 2 for ch in s], dtype=np.uint8)
-                img = np.repeat(vals[None, :], 8, axis=0)
-                img = np.repeat(img, 8, axis=1)  # flat 8x8 block per char
-                dec = decode_media(encode_jpeg(img, quality=50), "image/jpeg")
+                dec = np.zeros(0, dtype=np.uint8)
+                if s:
+                    vals = np.array(
+                        [(min(ord(ch), 255) // 2) * 2 for ch in s], dtype=np.uint8
+                    )
+                    img = np.repeat(vals[None, :], 8, axis=0)
+                    img = np.repeat(img, 8, axis=1)  # flat 8x8 block per char
+                    dec = decode_media(encode_jpeg(img, quality=50), "image/jpeg")
                 hist = np.bincount(dec // 16, minlength=16)
                 out["media_id"].append(int(doc_id))
                 out["kind"].append("image")

@@ -4,7 +4,12 @@ Local-mode settings follow the public Spark tuning guidance: shuffle
 partitions sized to cores (not the 200 default), AQE on (runtime
 coalescing + skew-join splitting), Arrow on for every pandas UDF,
 UTC session timezone so results compare bit-for-bit against DuckDB
-oracles. On a real cluster the same builder is used with ``master``
+oracles. Parallel file listing is off: every LakeTable scan already
+names its files from the manifest, and Spark's listing job (one task
+per path past 32 paths) only re-stats them; the driver stats them
+serially instead. Every entry point — jobs/, bench.py, tools/,
+perfbench/ and the test fixture — builds its session here, so all of
+them get it. On a real cluster the same builder is used with ``master``
 unset (taken from spark-submit) and ``shuffle_partitions`` sized to
 2-3x total cores.
 """
@@ -76,6 +81,12 @@ def get_spark(
         # limiter after cache reads; cf. BENCH/BASELINE.md controls).
         .config("spark.sql.files.maxPartitionBytes", str(32 * 1024 * 1024))
         .config("spark.sql.files.openCostInBytes", str(2 * 1024 * 1024))
+        # scans name their files (LakeTable passes the manifest's list);
+        # above this many paths Spark stats them in a listing job with
+        # one task per path. The table's metadata I/O is local os.*
+        # calls, so a serial stat of N named files on the driver is
+        # cheaper than an N-task job: no path list reaches this value.
+        .config("spark.sql.sources.parallelPartitionDiscovery.threshold", str(2**31 - 1))
         .config(
             "spark.driver.extraJavaOptions",
             os.environ.get("SPARK_DRIVER_JAVA_OPTS", "-XX:G1HeapRegionSize=32m"),

@@ -2,7 +2,7 @@
 
 Tails a change-event source (file-based WAL segments here; the same
 ``foreachBatch`` body works over Kafka on a cluster), and per
-microbatch: salted-repartition -> vectorized enrichment -> max-LSN
+microbatch: salted-repartition -> enrichment -> max-LSN
 dedup -> LakeTable MERGE, all inside an exactly-once envelope:
 
 * the streaming checkpoint (``checkpointLocation``) makes the source
@@ -123,8 +123,8 @@ def apply_batch(
     publish is the usual ledger no-op.
 
     Order: (salt ->) enrich -> merge. Enrichment is a pure map stage
-    whose Arrow hop carries only the UDF's input columns (path, lang
-    — content never crosses into Python), so it runs on the raw batch;
+    of built-in expressions over path and lang (no Python worker), so
+    it runs on the raw batch;
     the within-batch max-LSN dedup is FUSED into the merge's single
     bucket-partitioned shuffle (LakeTable.merge) — a raw microbatch
     costs exactly one full-row exchange end-to-end. Salting applies

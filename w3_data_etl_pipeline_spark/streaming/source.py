@@ -86,6 +86,7 @@ def _duck_type(dt: T.DataType) -> str:
         T.BooleanType: "BOOLEAN",
         T.DateType: "DATE",
         T.TimestampType: "TIMESTAMP",
+        T.TimestampNTZType: "TIMESTAMP",
         T.BinaryType: "BLOB",
     }
     for k, v in m.items():
@@ -110,6 +111,7 @@ def _arrow_type(dt: T.DataType):
         T.BooleanType: pa.bool_(),
         T.DateType: pa.date32(),
         T.TimestampType: pa.timestamp("us"),
+        T.TimestampNTZType: pa.timestamp("us"),
         T.BinaryType: pa.binary(),
     }
     for k, v in m.items():
